@@ -19,15 +19,6 @@ object PlanSnap {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // variant plans: SPARK_GRAFT_CONF="k=v;k=v" (MicroBench's convention)
-    // lets a before-plan reproduce the pre-optimization shape via the
-    // optimization knobs (e.g. spark.graft.scan.spread=false)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
     val outDir = Bench.repoRoot.resolve("plans").resolve(tag)
     java.nio.file.Files.createDirectories(outDir)
     // stage:<name> resolves a Prof stage DataFrame instead of a registry

@@ -29,34 +29,6 @@ object Prof {
         col("dn.doc_id").as("doc_id"), col("dn.n").as("n"))
     def perDoc() = hot().groupBy(col("doc_id"), col("n"))
       .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("arr"))
-    // variant: same output as shinglesWithCount, but the array expr is
-    // spelled twice (size + explode) instead of projected once and read
-    // twice — tests whether the named-column shape defeats codegen
-    def swcB() = {
-      val arrExpr = "array_distinct(transform(" +
-        graft.ops.Ngrams.starts("toks", 3) + ", " +
-        "i -> xxhash64(" + graft.ops.Ngrams.gramAt("toks", 3) + ")))"
-      graft.Tables.t(spark, sf, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .where(size(col("toks")) >= 3)
-        .select(col("doc_id"),
-          expr(s"size($arrExpr)").cast("long").as("n"),
-          explode(expr(arrExpr)).as("sh"))
-    }
-    // fix candidate: arr projected once; n computed BELOW the Generate so
-    // the array does not ride the per-row output; explode_outer so no
-    // (size>0, isnotnull) filter is inferred and pushed below the project
-    def swcC() = {
-      val arrExpr = "array_distinct(transform(" +
-        graft.ops.Ngrams.starts("toks", 3) + ", " +
-        "i -> xxhash64(" + graft.ops.Ngrams.gramAt("toks", 3) + ")))"
-      graft.Tables.t(spark, sf, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .where(size(col("toks")) >= 3)
-        .select(col("doc_id"), expr(arrExpr).as("arr"))
-        .select(col("doc_id"), size(col("arr")).cast("long").as("n"), col("arr"))
-        .select(col("doc_id"), col("n"), explode_outer(col("arr")).as("sh"))
-    }
     // j60b decomposition: weighted prefix index + candidate join
     def j60tot() = graft.Tables.t(spark, sf, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -71,45 +43,9 @@ object Prof {
           col("tot").as("t2")), col("sh") === col("sh2") && col("d1") < col("d2"))
         .select("d1", "d2", "t1", "t2").distinct()
     }
-    // j51 decomposition (r22): pre-checkpoint corpus build + rarest-7
-    // prefix — the stage the in-array rewrite (J51InArrayKey) reshapes
-    def j51corpus() = {
-      val base = graft.Tables.t(spark, sf, "part")
-        .select(col("p_partkey").as("id"),
-          concat(substring(md5(col("p_partkey").cast("string")), 1, 8),
-            lit(" "), col("p_name")).as("txt"))
-      val variants = base.select((col("id") + 1000000L).as("id"),
-        expr("""CASE CAST(id % 4 AS INT)
-          WHEN 0 THEN concat(substring(txt, 1, 2), substring(txt, 4))
-          WHEN 1 THEN concat(substring(txt, 1, 4), 'q', substring(txt, 6))
-          WHEN 2 THEN concat(substring(txt, 1, 3), 'x', substring(txt, 5, 4),
-                             'z', substring(txt, 10))
-          ELSE concat('zzz ', txt) END""").as("txt"))
-      base.unionAll(variants).where(length(col("txt")) >= 9)
-    }
-    def j51prefix() = {
-      val corpus = j51corpus()
-      val grams = corpus.select(col("id"), col("txt"),
-        explode(expr(
-          "array_distinct(transform(" +
-            graft.ops.Ngrams.charStarts("txt", 3) + "," +
-            " p -> substring(txt, p, 3)))")).as("g"))
-      val dfRel = grams.groupBy("g").agg(count(lit(1)).as("df"))
-      if (graft.ops.Knobs.j51InArray(spark)) {
-        grams.join(dfRel, "g")
-          .groupBy(col("id"), col("txt"))
-          .agg(slice(sort_array(collect_list(struct(col("df"), col("g")))),
-            1, 7).as("pre"))
-          .select(col("id"), col("txt"), explode(col("pre")).as("x"))
-          .select(col("id"), col("txt"), col("x.g").as("g"))
-      } else {
-        grams.join(dfRel, "g")
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("id").orderBy("df", "g")))
-          .where(col("rn") <= 7).select(col("id"), col("txt"), col("g"))
-      }
-    }
+    // j51 decomposition: pre-checkpoint corpus build + rarest-7 prefix
+    def j51prefix() = graft.ops.Round9.j51Prefix(
+      graft.ops.Round9.j51Corpus(spark, sf))
     // j53 decomposition: the Lloyd train (2 rounds over the checkpointed
     // subvector relation) and one extra assignment over the result
     def j53train() = graft.ops.Round13.pqTrain(spark, sf)._2
@@ -124,8 +60,6 @@ object Prof {
       "j53_train" -> (() => j53train()),
       "j53_codes" -> (() => j53codes()),
       "pfx1_shingles_with_count" -> (() => swc()),
-      "pfx1b_swc_recompute" -> (() => swcB()),
-      "pfx1c_swc_outer_below" -> (() => swcC()),
       "pfx2_postings_groupby" -> (() => postings()),
       "pfx3_hot_explode" -> (() => hot()),
       "pfx4_perdoc_sortarray" -> (() => perDoc()),
@@ -150,12 +84,6 @@ object Prof {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
     def releaseCaches(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values

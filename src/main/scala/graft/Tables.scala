@@ -55,38 +55,31 @@ object Tables {
     * estimate, never higher), redistribute by a deterministic hash of
     * `key` so the fused compute uses every core. At production scale the
     * condition is false (a 100 TB table is ~10⁶ splits) and this is the
-    * identity — the knob (`spark.graft.scan.spread`, default on) exists so
-    * the A/B is one conf flip, not a code edit. The exchange is hash, not
-    * round-robin: deterministic under task retry (guide §2.5's SPARK-38388
-    * note) and reusable by any downstream groupBy/join on the same key. */
-  val ScanSpreadKey = "spark.graft.scan.spread"
+    * identity. The exchange is hash, not round-robin: deterministic under
+    * task retry (guide §2.5's SPARK-38388 note) and reusable by any
+    * downstream groupBy/join on the same key. */
   def spread(spark: SparkSession, dir: String, name: String,
       df: DataFrame, key: Column): DataFrame = {
-    val enabled = spark.conf.getOption(ScanSpreadKey)
-      .map(_.trim.toBoolean).getOrElse(true)
-    if (!enabled) df
-    else {
-      val f = new java.io.File(s"$dir/$name.parquet")
-      // directory tables: sum the part files (driver fixtures are single
-      // files; this keeps the estimate honest for written intermediates).
-      // UNKNOWN size — non-local FS, renamed file, nested part dirs, any
-      // path java.io.File cannot stat — must mean "assume large, do NOT
-      // spread": a 0-byte fallback would make the starved-scan condition
-      // (0 / maxSplit < cores) always true and insert a full hash
-      // repartition of a 100 TB input exactly when the estimate is
-      // unavailable, inverting the identity-at-scale contract (r21 verdict
-      // item 1). Long.MaxValue keeps the device the identity there.
-      val bytes =
-        if (f.isFile) f.length
-        else Option(f.listFiles()).map(_.filter(_.isFile).map(_.length).sum)
-          .filter(_ > 0L).getOrElse(Long.MaxValue)
-      val cores = spark.sparkContext.defaultParallelism
-      val maxSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-        .flatMap(v => scala.util.Try(
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)).toOption)
-        .getOrElse(128L * 1024 * 1024)
-      if (bytes / maxSplit < cores) df.repartition(cores, key) else df
-    }
+    val f = new java.io.File(s"$dir/$name.parquet")
+    // directory tables: sum the part files (driver fixtures are single
+    // files; this keeps the estimate honest for written intermediates).
+    // UNKNOWN size — non-local FS, renamed file, nested part dirs, any
+    // path java.io.File cannot stat, a 0-byte file or an empty directory —
+    // must mean "assume large, do NOT spread": a 0-byte estimate would
+    // make the starved-scan condition (0 / maxSplit < cores) always true
+    // and insert a full hash repartition of a 100 TB input exactly when
+    // the estimate is unavailable, inverting the identity-at-scale
+    // contract. Long.MaxValue keeps the device the identity there.
+    val bytes =
+      (if (f.isFile) Some(f.length)
+       else Option(f.listFiles()).map(_.filter(_.isFile).map(_.length).sum))
+        .filter(_ > 0L).getOrElse(Long.MaxValue)
+    val cores = spark.sparkContext.defaultParallelism
+    val maxSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+      .flatMap(v => scala.util.Try(
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)).toOption)
+      .getOrElse(128L * 1024 * 1024)
+    if (bytes / maxSplit < cores) df.repartition(cores, key) else df
   }
 
   val Money: DecimalType = DecimalType(18, 4)

@@ -131,7 +131,7 @@ object LlmOps {
     * prefix is SLICED before posexplode, so only prefix rows are ever
     * emitted. The window shape ranked all 260k postings through the
     * row-sorter machinery and filtered after; this sorts ~150-element
-    * arrays in place and emits half the rows. MicroBench min-of-3 at
+    * arrays in place and emits half the rows. Interleaved min-of-3 at
     * sf0.1 with j2 as the machine-phase control: window 6.23 s
     * (j2 4.43) vs array 4.76 s (j2 3.51) — ~20% off j2c's own time, and
     * the allocation-heavy sorter path that made j2c the most

@@ -99,37 +99,23 @@ object Round13 {
   /** Assignment step: nearest centroid per (vec_id, m), ties to the
     * smaller cid. Centroids are ≤ M·K rows — always broadcast.
     *
-    * Default shape (r22, verdict item 8, guide §2.4 "remove shuffles
-    * outright"): the per-subspace centroids are collected into ONE
-    * broadcast array row per m and the argmin runs IN-EXPRESSION
-    * (array_min over struct(dist, cid)) — the assignment is then MAP-ONLY:
-    * no K-way join blowup and, decisively at scale, no corpus-sized
-    * shuffle per Lloyd iteration (the old shape shuffled every (vec_id, m)
-    * group through a groupBy-min). Ordering semantics are IDENTICAL:
-    * array_min and the min aggregate compare structs with the same
-    * interpreted struct ordering — least (dist, cid) wins, a NULL dist
-    * sorts first in both — and sv rides the row instead of the struct.
-    * Knob-gated (PqAssignInArrayKey, default on); Round13Spec pins both
-    * shapes equal. */
-  private[graft] def lloydAssign(sub: DataFrame, cent: DataFrame): DataFrame =
-    if (Knobs.pqAssignInArray(sub.sparkSession)) {
-      val centArr = cent.groupBy("m")
-        .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cents"))
-      sub.join(broadcast(centArr), "m")
-        .select(col("vec_id"), col("m"),
-          expr("array_min(transform(cents, cc -> struct(" +
-            sqDist("sv", "cc.cv") + " as dist, cc.cid as cid)))").as("a"),
-          col("sv"))
-        .select(col("vec_id"), col("m"), col("a.cid").as("cid"), col("sv"))
-    } else {
-      sub.join(broadcast(cent), "m")
-        .select(col("vec_id"), col("m"), col("sv"), col("cid"),
-          expr(sqDist("sv", "cv")).as("dist"))
-        .groupBy("vec_id", "m")
-        .agg(min(struct(col("dist"), col("cid"), col("sv"))).as("a"))
-        .select(col("vec_id"), col("m"),
-          col("a.cid").as("cid"), col("a.sv").as("sv"))
-    }
+    * The per-subspace centroids are collected into ONE broadcast array
+    * row per m and the argmin runs IN-EXPRESSION (array_min over
+    * struct(dist, cid)), so the assignment is MAP-ONLY: no K-way join
+    * blowup and, decisively at scale, no corpus-sized shuffle per Lloyd
+    * iteration (guide §2.4 "remove shuffles outright"). array_min uses
+    * the interpreted struct ordering: least (dist, cid) wins and a NULL
+    * dist sorts first. */
+  private[graft] def lloydAssign(sub: DataFrame, cent: DataFrame): DataFrame = {
+    val centArr = cent.groupBy("m")
+      .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cents"))
+    sub.join(broadcast(centArr), "m")
+      .select(col("vec_id"), col("m"),
+        expr("array_min(transform(cents, cc -> struct(" +
+          sqDist("sv", "cc.cv") + " as dist, cc.cid as cid)))").as("a"),
+        col("sv"))
+      .select(col("vec_id"), col("m"), col("a.cid").as("cid"), col("sv"))
+  }
 
   /** Update step: per-dim integer floor-mean of the assigned subvectors;
     * empty centroids drop (both engines see the same memberships, so they

@@ -47,7 +47,7 @@ object Round16 {
     * is global). Types past the bound can never be the smallest shared
     * type and are dropped with zero recall loss. df=1 types count toward
     * cum_before but can never be shared — dropped at emission. The
-    * per-doc window runs over that doc's own postings, never the corpus;
+    * per-doc fold runs over that doc's own postings, never the corpus;
     * hot (boilerplate) types have maximal df, sort LAST, and thus never
     * enter the index — the Σdf² heavy-key mass vanishes from the
     * candidate join instead of being enumerated. */
@@ -55,45 +55,30 @@ object Round16 {
       tot: org.apache.spark.sql.DataFrame, tau: Double)
       : org.apache.spark.sql.DataFrame = {
     val typeDf = tf.groupBy("sh").agg(count(lit(1)).as("df"))
-    if (Knobs.wprefixInArray(tf.sparkSession)) {
-      // r22 (verdict item 4, the j2c in-array device generalized to
-      // cumulative weights): collect each doc's postings ONCE, sort them
-      // canonically in-array (struct sort is field-lexicographic on
-      // (df, sh, c); sh is unique per doc, so the order equals the window
-      // orderBy("df", "sh")), find the prefix LENGTH with one O(n) fold
-      // over the running weight — the running sum is monotone
-      // nondecreasing (c >= 1), so the qualifying rows are exactly a
-      // prefix — and emit only prefix rows. Replaces the window shape
-      // (below, knob off), whose full-relation row-sorter ranked every
-      // posting and filtered after. df=1 types count toward cum_before
-      // but can never be shared — dropped at emission, as before (the
-      // where below also drops explode_outer's null row for an empty
-      // slice, which cannot occur: the first posting's cum_before is 0
-      // <= tot - ceil(tot*tau) for any tau <= 1).
-      tf.join(typeDf, "sh")
-        .groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("df"), col("sh"), col("c"))))
-          .as("ps"))
-        .join(tot, "doc_id")
-        .withColumn("plen", expr(
-          s"""aggregate(ps, struct(cast(0 as bigint) as cum, 0 as cnt),
-             (acc, x) -> struct(acc.cum + x.c,
-               acc.cnt + if(acc.cum <= tot - ceil(tot * $tau), 1, 0)),
-             acc -> acc.cnt)"""))
-        .select(col("doc_id"), col("tot"),
-          explode_outer(expr("slice(ps, 1, plen)")).as("x"))
-        .where(col("x.df") >= 2)
-        .select(col("doc_id"), col("x.sh").as("sh"), col("tot"))
-    } else {
-      val w = Window.partitionBy("doc_id").orderBy("df", "sh")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      tf.join(typeDf, "sh")
-        .join(tot, "doc_id")
-        .withColumn("cum_before", coalesce(sum("c").over(w), lit(0L)))
-        .where(col("cum_before") <= col("tot") - ceil(col("tot") * tau)
-          && col("df") >= 2)
-        .select(col("doc_id"), col("sh"), col("tot"))
-    }
+    // the j2c in-array device generalized to cumulative weights: collect
+    // each doc's postings ONCE, sort them canonically in-array (struct
+    // sort is field-lexicographic on (df, sh, c); sh is unique per doc,
+    // so the order is the canonical (df, sh) order), find the prefix
+    // LENGTH with one O(n) fold over the running weight — the running
+    // sum is monotone nondecreasing (c >= 1), so the qualifying rows are
+    // exactly a prefix — and emit only prefix rows. The df >= 2 filter
+    // also drops explode_outer's null row for an empty slice, which
+    // cannot occur: the first posting's cum_before is 0
+    // <= tot - ceil(tot*tau) for any tau <= 1.
+    tf.join(typeDf, "sh")
+      .groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("sh"), col("c"))))
+        .as("ps"))
+      .join(tot, "doc_id")
+      .withColumn("plen", expr(
+        s"""aggregate(ps, struct(cast(0 as bigint) as cum, 0 as cnt),
+           (acc, x) -> struct(acc.cum + x.c,
+             acc.cnt + if(acc.cum <= tot - ceil(tot * $tau), 1, 0)),
+           acc -> acc.cnt)"""))
+      .select(col("doc_id"), col("tot"),
+        explode_outer(expr("slice(ps, 1, plen)")).as("x"))
+      .where(col("x.df") >= 2)
+      .select(col("doc_id"), col("x.sh").as("sh"), col("tot"))
   }
 
   /** j60c's ICWS sampler: per (doc, slot) the argmin-a (type, t) sample

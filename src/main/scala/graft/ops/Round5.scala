@@ -259,7 +259,7 @@ object Round5 {
     // DuckDB, so the whole incremental path is hash-checked.
     Q("j28_dedup_incremental",
       (s, d) => {
-        // spread = false: measured negative HERE (MicroBench interleaved
+        // spread = false: measured negative HERE (interleaved
         // A/B, sf0.1/32 threads: 3.6 -> 5.6 s with the spread) — this key
         // re-derives the unpersisted sig subtree once per side, and two
         // pinned-32-partition cascades cost more than the starved map

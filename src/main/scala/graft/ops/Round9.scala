@@ -216,6 +216,49 @@ object Round9 {
       .select(col("doc_id"), col("swf"),
         round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6).as("score"))
 
+  /** j51's string corpus (id, txt), as described at that key — neither
+    * spread nor checkpointed. Shared with Prof's j51 stage. */
+  private[graft] def j51Corpus(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val base = t(s, d, "part").select(col("p_partkey").as("id"),
+      concat(substring(md5(col("p_partkey").cast("string")), 1, 8),
+        lit(" "), col("p_name")).as("txt"))
+    val variants = base.select((col("id") + 1000000L).as("id"),
+      expr("""CASE CAST(id % 4 AS INT)
+        WHEN 0 THEN concat(substring(txt, 1, 2), substring(txt, 4))
+        WHEN 1 THEN concat(substring(txt, 1, 4), 'q', substring(txt, 6))
+        WHEN 2 THEN concat(substring(txt, 1, 3), 'x', substring(txt, 5, 4),
+                           'z', substring(txt, 10))
+        ELSE concat('zzz ', txt) END""").as("txt"))
+    base.unionAll(variants).where(length(col("txt")) >= 9)
+  }
+
+  /** j51's rarest-7 gram prefix (id, txt, g) over a (id, txt) corpus:
+    * distinct 3-grams per string, global df, then the 7 grams of least
+    * (df, g) per string via in-array sort+slice (the j2c device — struct
+    * sort is field-lexicographic on (df, g) and g is unique per id, so
+    * only prefix rows are ever emitted, with no window sorter ranking
+    * every gram row). The gram stream carries txt alongside: the j2b
+    * id-only-then-re-attach device was MEASURED SLOWER here (8.4 s vs
+    * 6.3 s min-of-3 at sf0.1) — with ~40-char strings the two re-attach
+    * joins cost more than hauling the payload through the shuffles; that
+    * device pays off for j2b's wide signature arrays, not for short
+    * scalar strings. Shared with Prof's j51 stage. */
+  private[graft] def j51Prefix(corpus: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val grams = corpus.select(col("id"), col("txt"),
+      explode(expr(
+        "array_distinct(transform(" + Ngrams.charStarts("txt", 3) + "," +
+          " p -> substring(txt, p, 3)))")).as("g"))
+    val df = grams.groupBy("g").agg(count(lit(1)).as("df"))
+    grams.join(df, "g")
+      .groupBy(col("id"), col("txt"))
+      .agg(slice(sort_array(collect_list(struct(col("df"), col("g")))),
+        1, 7).as("pre"))
+      .select(col("id"), col("txt"), explode(col("pre")).as("x"))
+      .select(col("id"), col("txt"), col("x.g").as("g"))
+  }
+
   val all: Seq[Q] = Seq(
 
     // j46 — graph centrality over the j39 kNN graph: 3 fixed iterations
@@ -632,7 +675,7 @@ object Round9 {
 
     // e11b — the composable twin: row_number window + filter, byte-
     // identical output (shared oracle shape with e11). Exists to keep the
-    // custom operator honest: MicroBench runs both on the same relation.
+    // custom operator honest: a benchmark can time both on one relation.
     Q("e11b_topk_window",
       (s, d) => {
         val w = Window.partitionBy("user_id")
@@ -1082,88 +1125,33 @@ object Round9 {
     // claim itself is hash-checked.
     Q("j51_dedup_editdist",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val base = t(s, d, "part").select(col("p_partkey").as("id"),
-          concat(substring(md5(col("p_partkey").cast("string")), 1, 8),
-            lit(" "), col("p_name")).as("txt"))
-        val variants = base.select((col("id") + 1000000L).as("id"),
-          expr("""CASE CAST(id % 4 AS INT)
-            WHEN 0 THEN concat(substring(txt, 1, 2), substring(txt, 4))
-            WHEN 1 THEN concat(substring(txt, 1, 4), 'q', substring(txt, 6))
-            WHEN 2 THEN concat(substring(txt, 1, 3), 'x', substring(txt, 5, 4),
-                               'z', substring(txt, 10))
-            ELSE concat('zzz ', txt) END""").as("txt"))
         // spread before the checkpoint: the 3-gram explode + substring
         // transform below runs on the checkpointed partitioning, which a
         // starved single-row-group part scan would pin at 2 tasks
         // (Tables.spread scaladoc; identity at scale)
-        val corpus = graft.Tables.spread(s, d, "part",
-            base.unionAll(variants).where(length(col("txt")) >= 9), col("id"))
+        val corpus = graft.Tables.spread(s, d, "part", j51Corpus(s, d), col("id"))
           .localCheckpoint()
-        // distinct 3-grams per string, global df, rarest-7 prefix.
-        // The gram stream carries txt alongside: the j2b id-only-then-
-        // re-attach device was MEASURED SLOWER here (8.4 s vs 6.3 s
-        // min-of-3 at sf0.1) — with ~40-char strings the two re-attach
-        // joins cost more than hauling the payload through the shuffles;
-        // that device pays off for j2b's wide signature arrays, not for
-        // short scalar strings.
-        val grams = corpus.select(col("id"), col("txt"),
-            explode(expr(
-              "array_distinct(transform(" + Ngrams.charStarts("txt", 3) + "," +
-                " p -> substring(txt, p, 3)))")).as("g"))
-        val df = grams.groupBy("g").agg(count(lit(1)).as("df"))
-        // r22: the rarest-7 prefix via in-array sort+slice (the j2c
-        // device — struct sort is field-lexicographic on (df, g), g is
-        // unique per id, so the order equals the window's orderBy; only
-        // prefix rows are ever emitted) instead of ranking every gram
-        // row through the window sorter and filtering after. Knob-gated
-        // (default on) so the A/B and plan diff are one conf flip.
-        val prefix = if (Knobs.j51InArray(s)) {
-          grams.join(df, "g")
-            .groupBy(col("id"), col("txt"))
-            .agg(slice(sort_array(collect_list(struct(col("df"), col("g")))),
-              1, 7).as("pre"))
-            .select(col("id"), col("txt"), explode(col("pre")).as("x"))
-            .select(col("id"), col("txt"), col("x.g").as("g"))
-        } else {
-          grams.join(df, "g")
-            .withColumn("rn", row_number().over(
-              Window.partitionBy("id").orderBy("df", "g")))
-            .where(col("rn") <= 7).select(col("id"), col("txt"), col("g"))
-        }
-        // r22 (verdict item 5): dedup candidates on (id_a, id_b) BEFORE
-        // the txts ride any exchange — the candidate join and its
-        // distinct then shuffle 8-byte ids + 4-byte lengths instead of
-        // two ~40-char strings per row (guide §2.3); both txt sides
-        // re-attach AFTER the distinct via explicit broadcast joins
-        // against the checkpointed corpus (~80k rows, a few MB — the
-        // r19 negative result re-attached via shuffle joins on the gram
-        // stream, a different shape). txt is functionally determined by
-        // id, so the pair set is unchanged. Knob-gated for the A/B.
-        val cand = if (Knobs.j51SlimCand(s)) {
-          val a = prefix.select(col("id").as("id_a"),
-            length(col("txt")).as("la"), col("g"))
-          val b = prefix.select(col("id").as("id_b"),
-            length(col("txt")).as("lb"), col("g"))
-          val ids = a.join(b, Seq("g"))
-            .where(col("id_a") < col("id_b") && abs(col("la") - col("lb")) <= 2)
-            .select("id_a", "id_b").distinct()
-          ids.join(broadcast(corpus.select(col("id").as("id_a"),
-              col("txt").as("ta"))), "id_a")
-            .join(broadcast(corpus.select(col("id").as("id_b"),
-              col("txt").as("tb"))), "id_b")
-            .select(col("id_a"), col("id_b"), col("ta"), col("tb"))
-        } else {
-          val a = prefix.select(col("id").as("id_a"), col("txt").as("ta"),
-            col("g"))
-          val b = prefix.select(col("id").as("id_b"), col("txt").as("tb"),
-            col("g"))
-          a.join(b, Seq("g"))
-            .where(col("id_a") < col("id_b") &&
-              abs(length(col("ta")) - length(col("tb"))) <= 2)
-            .select(col("id_a"), col("id_b"), col("ta"), col("tb")).distinct()
-        }
-        cand
+        val prefix = j51Prefix(corpus)
+        // dedup candidates on (id_a, id_b) BEFORE the txts ride any
+        // exchange — the candidate join and its distinct then shuffle
+        // 8-byte ids + 4-byte lengths instead of two ~40-char strings per
+        // row (guide §2.3); both txt sides re-attach AFTER the distinct by
+        // plain joins against the checkpointed corpus. txt is functionally
+        // determined by id, so the pair set is unchanged. No broadcast
+        // hint: the corpus grows with `part`, so the planner's size
+        // estimate decides — a broadcast at fixture scale, a shuffle join
+        // above autoBroadcastJoinThreshold (PlanSpec pins both joins as
+        // BroadcastHashJoin at sf0.001).
+        val a = prefix.select(col("id").as("id_a"),
+          length(col("txt")).as("la"), col("g"))
+        val b = prefix.select(col("id").as("id_b"),
+          length(col("txt")).as("lb"), col("g"))
+        val ids = a.join(b, Seq("g"))
+          .where(col("id_a") < col("id_b") && abs(col("la") - col("lb")) <= 2)
+          .select("id_a", "id_b").distinct()
+        ids
+          .join(corpus.select(col("id").as("id_a"), col("txt").as("ta")), "id_a")
+          .join(corpus.select(col("id").as("id_b"), col("txt").as("tb")), "id_b")
           .withColumn("dist", levenshtein(col("ta"), col("tb")))
           .where(col("dist") <= 2)
           .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))

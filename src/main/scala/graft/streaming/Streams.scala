@@ -68,6 +68,37 @@ object Streams {
 
   private def tmp(tag: String): String = graft.ops.Scratch.unique(tag)
 
+  /* One data batch. Where the protocol provably allows it, a harness
+    * feeds all its events as ONE micro-batch: each extra micro-batch pays
+    * a full per-batch cost (incremental planning + one state-store
+    * open/commit per store per partition; a stream-stream join keeps 4
+    * stores per partition) that dominates these keys at fixture scale
+    * (scaling ratio ≈ 1 at 8 vs 32 cores in PERF_r21).
+    *
+    * Why output is row-identical under any split of the events, per key
+    * class:
+    *  - collectEvents sorts by (ts_ms, event_id), so a later part is
+    *    never below the watermark an earlier part set — NO row is
+    *    dropped as late under any batching;
+    *  - inner interval join (i8): rows are emitted on MATCH, never on
+    *    eviction, and the match set over the union of inputs is
+    *    batching-invariant (an evicted row can never match a future row:
+    *    any future row's event time exceeds the watermark + delay, which
+    *    exceeds the evicted row's interval end);
+    *  - outer interval joins (i21/i26): null-extension happens at state
+    *    eviction, which Spark only performs when the watermark proves no
+    *    future match is possible — by the no-late-rows property above,
+    *    that decision is identical under any batching of time-ordered
+    *    input, so the unmatched set equals the batch join's;
+    *  - keyed-state folds (i7/i10/i22/i23): handleInputRows folds the
+    *    batch sorted by (ts_ms, event_id); state carries the fold across
+    *    batch boundaries, so folding one batch computes the same
+    *    sessions/counters/top-k; timer-driven final flushes come from the
+    *    sentinel either way.
+    * Keys whose multi-batch shape IS the semantics keep it: i4 (late rows
+    * must arrive after the watermark advanced), i13/i25/i27 (re-sends
+    * must land in a later batch than the original). */
+
   /** Run `body` with a low shuffle-partition count, restoring the session
     * conf after. Stateful streaming cost scales with partitions — every
     * micro-batch commits one state-store delta per shuffle partition (×4
@@ -86,43 +117,6 @@ object Streams {
     * key cardinality. Runtime-tunable (`spark.graft.stream.shufflePartitions`)
     * for exactly that retune; the default preserves each operator's
     * graded geometry. */
-  /** r22 (verdict item 3): the two-half `addData` split in the batch
-    * harnesses was incidental, not semantic — each extra micro-batch pays
-    * a full per-batch cost (incremental planning + one state-store
-    * open/commit per store per partition; a stream-stream join keeps 4
-    * stores per partition) that dominates these keys at fixture scale
-    * (scaling ratio ≈ 1 at 8 vs 32 cores in PERF_r21). Where the protocol
-    * provably allows it, the data halves now arrive as ONE micro-batch.
-    *
-    * The semantics argument (why output is row-identical, per key class):
-    *  - collectEvents sorts by (ts_ms, event_id), so the second half is
-    *    never below the watermark the first half set — NO row is dropped
-    *    as late in either protocol;
-    *  - inner interval join (i8): rows are emitted on MATCH, never on
-    *    eviction, and the match set over the union of inputs is
-    *    batching-invariant (an evicted row can never match a future row:
-    *    any future row's event time exceeds the watermark + delay, which
-    *    exceeds the evicted row's interval end);
-    *  - outer interval joins (i21/i26): null-extension happens at state
-    *    eviction, which Spark only performs when the watermark proves no
-    *    future match is possible — by the no-late-rows property above,
-    *    that decision is identical under any batching of time-ordered
-    *    input, so the unmatched set equals the batch join's;
-    *  - keyed-state folds (i7/i10/i22/i23): handleInputRows folds the
-    *    batch sorted by (ts_ms, event_id); state carries the fold across
-    *    batch boundaries, so folding one fused batch computes the same
-    *    sessions/counters/top-k; timer-driven final flushes come from the
-    *    sentinel either way.
-    * Keys whose multi-batch shape IS the semantics keep it: i4 (late rows
-    * must arrive after the watermark advanced), i13/i25/i27 (re-sends
-    * must land in a later batch than the original).
-    *
-    * Knob (default on) so the A/B is one conf flip; StreamingSpec pins
-    * fused == unfused on the fixture. */
-  val StreamFusedAddsKey = "spark.graft.stream.fusedAdds"
-  private def fusedAdds(s: SparkSession): Boolean =
-    s.conf.getOption(StreamFusedAddsKey).forall(_.trim.toBoolean)
-
   val StreamShufflePartitionsKey = "spark.graft.stream.shufflePartitions"
   private def withFewShufflePartitions[T](s: SparkSession, n: Int = 4)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -324,18 +318,10 @@ object Streams {
     val q = sessions.toDF("sess_start", "user_id", "n_events")
       .writeStream.outputMode("append").format("memory").queryName(qn)
       .option("checkpointLocation", tmp("i7ck")).start()
-    if (fusedAdds(s)) {
-      // one fused data batch (see StreamFusedAddsKey): the state fold over
-      // the (ts, id)-sorted batch computes the same sessions in one pass
-      stream.addData(evs.toSeq)
-      q.processAllAvailable()
-    } else {
-      val half = evs.length / 2
-      stream.addData(evs.take(half).toSeq)
-      q.processAllAvailable()
-      stream.addData(evs.drop(half).toSeq)
-      q.processAllAvailable()
-    }
+    // one data batch (see "One data batch"): the state fold over
+    // the (ts, id)-sorted batch computes the same sessions in one pass
+    stream.addData(evs.toSeq)
+    q.processAllAvailable()
     stream.addData(Seq(sentinel)) // watermark → +1y: every open session times out
     q.processAllAvailable()
     q.stop()
@@ -428,17 +414,9 @@ object Streams {
       val q = sessions.toDF("sess_start", "user_id", "n_events")
         .writeStream.outputMode("append").format("memory").queryName(qn)
         .option("checkpointLocation", tmp("i10ck")).start()
-      if (fusedAdds(s)) {
-        // one fused data batch — same fold as i7 (see StreamFusedAddsKey)
-        stream.addData(evs.toSeq)
-        q.processAllAvailable()
-      } else {
-        val half = evs.length / 2
-        stream.addData(evs.take(half).toSeq)
-        q.processAllAvailable()
-        stream.addData(evs.drop(half).toSeq)
-        q.processAllAvailable()
-      }
+      // one data batch — same fold as i7 (see "One data batch")
+      stream.addData(evs.toSeq)
+      q.processAllAvailable()
       stream.addData(Seq(sentinel)) // advance watermark: all timers fire
       q.processAllAvailable()
       q.stop()
@@ -462,8 +440,6 @@ object Streams {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = collectEvents(s, d)
-    val half = evs.length / 2
-
     val ls = MemoryStream[Ev]; val rs = MemoryStream[Ev]
     def side(m: MemoryStream[Ev], p: String) = m.toDF()
       .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
@@ -478,17 +454,10 @@ object Streams {
     val qn = "i8_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = joined.writeStream.outputMode("append").format("memory")
       .queryName(qn).option("checkpointLocation", tmp("i8ck")).start()
-    if (fusedAdds(s)) {
-      // one fused micro-batch (see StreamFusedAddsKey): an inner interval
-      // join emits on match only, so the output set is batching-invariant
-      ls.addData(evs.toSeq); rs.addData(evs.toSeq)
-      q.processAllAvailable()
-    } else {
-      ls.addData(evs.take(half).toSeq); rs.addData(evs.take(half).toSeq)
-      q.processAllAvailable()
-      ls.addData(evs.drop(half).toSeq); rs.addData(evs.drop(half).toSeq)
-      q.processAllAvailable()
-    }
+    // one micro-batch (see "One data batch"): an inner interval
+    // join emits on match only, so the output set is batching-invariant
+    ls.addData(evs.toSeq); rs.addData(evs.toSeq)
+    q.processAllAvailable()
     q.stop()
     s.table(qn).orderBy("a_id", "b_id")
   }
@@ -510,7 +479,6 @@ object Streams {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = collectEvents(s, d)
-    val half = evs.length / 2
     val ls = MemoryStream[Ev]; val rs = MemoryStream[Ev]
     def side(m: MemoryStream[Ev], p: String) = m.toDF()
       .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
@@ -529,19 +497,12 @@ object Streams {
     val qn = "i21_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = joined.writeStream.outputMode("append").format("memory")
       .queryName(qn).option("checkpointLocation", tmp("i21ck")).start()
-    if (fusedAdds(s)) {
-      // one fused data batch (see StreamFusedAddsKey): null-extension is
-      // an eviction-time decision the watermark makes identically under
-      // any batching of time-ordered input; the sentinel protocol below
-      // still closes every window
-      ls.addData(evs.toSeq); rs.addData(evs.toSeq)
-      q.processAllAvailable()
-    } else {
-      ls.addData(evs.take(half).toSeq); rs.addData(evs.take(half).toSeq)
-      q.processAllAvailable()
-      ls.addData(evs.drop(half).toSeq); rs.addData(evs.drop(half).toSeq)
-      q.processAllAvailable()
-    }
+    // one data batch (see "One data batch"): null-extension is
+    // an eviction-time decision the watermark makes identically under
+    // any batching of time-ordered input; the sentinel protocol below
+    // still closes every window
+    ls.addData(evs.toSeq); rs.addData(evs.toSeq)
+    q.processAllAvailable()
     // close every open window: two sentinel batches (watermark advances at
     // batch END, state evicts the batch after) far past max(ts) + interval.
     // The sentinel must survive the right side's type filter — the
@@ -578,7 +539,6 @@ object Streams {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = collectEvents(s, d)
-    val half = evs.length / 2
     val ls = MemoryStream[Ev]; val rs = MemoryStream[Ev]
     def side(m: MemoryStream[Ev], p: String) = m.toDF()
       .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
@@ -598,16 +558,9 @@ object Streams {
     val qn = "i26_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = joined.writeStream.outputMode("append").format("memory")
       .queryName(qn).option("checkpointLocation", tmp("i26ck")).start()
-    if (fusedAdds(s)) {
-      // one fused data batch — the i21 argument applies to both sides
-      ls.addData(evs.toSeq); rs.addData(evs.toSeq)
-      q.processAllAvailable()
-    } else {
-      ls.addData(evs.take(half).toSeq); rs.addData(evs.take(half).toSeq)
-      q.processAllAvailable()
-      ls.addData(evs.drop(half).toSeq); rs.addData(evs.drop(half).toSeq)
-      q.processAllAvailable()
-    }
+    // one data batch — the i21 argument applies to both sides
+    ls.addData(evs.toSeq); rs.addData(evs.toSeq)
+    q.processAllAvailable()
     // the i21 sentinel protocol: one far-future click on both sides
     // advances the global watermark past every real window, then an empty
     // pass applies it (eviction lands in the batch AFTER the one that
@@ -1333,18 +1286,10 @@ object Streams {
       val q = counted.toDF("user_id", "event_type", "n")
         .writeStream.outputMode("append").format("memory").queryName(qn)
         .option("checkpointLocation", tmp("i23ck")).start()
-      if (fusedAdds(s)) {
-        // one fused data batch: per-type counters are additive across any
-        // batching of the input
-        stream.addData(evs.toSeq)
-        q.processAllAvailable()
-      } else {
-        val half = evs.length / 2
-        stream.addData(evs.take(half).toSeq)
-        q.processAllAvailable()
-        stream.addData(evs.drop(half).toSeq)
-        q.processAllAvailable()
-      }
+      // one data batch: per-type counters are additive across any
+      // batching of the input
+      stream.addData(evs.toSeq)
+      q.processAllAvailable()
       stream.addData(Seq(sentinel))
       q.processAllAvailable()
       q.stop()
@@ -1393,18 +1338,10 @@ object Streams {
       val q = ranked.toDF("user_id", "rank", "value")
         .writeStream.outputMode("append").format("memory").queryName(qn)
         .option("checkpointLocation", tmp("i22ck")).start()
-      if (fusedAdds(s)) {
-        // one fused data batch: top-k insertion is associative, so the
-        // merge-then-truncate state reaches the same final ranking
-        stream.addData(evs.toSeq)
-        q.processAllAvailable()
-      } else {
-        val half = evs.length / 2
-        stream.addData(evs.take(half).toSeq)
-        q.processAllAvailable()
-        stream.addData(evs.drop(half).toSeq)
-        q.processAllAvailable()
-      }
+      // one data batch: top-k insertion is associative, so the
+      // merge-then-truncate state reaches the same final ranking
+      stream.addData(evs.toSeq)
+      q.processAllAvailable()
       stream.addData(Seq(sentinel)) // watermark past endTs: timers fire
       q.processAllAvailable()
       q.stop()

@@ -360,6 +360,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("levenshtein"), p)
   }
 
+  test("j51 re-attaches txt by plain joins the planner broadcasts at fixture scale") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledJoin}
+    val df = SparkEntry.queries("j51_dedup_editdist")(spark, TestSpark.sf)
+    // the corpus grows with `part`: no hint may force its broadcast
+    val hints = df.queryExecution.analyzed.collect { case h: ResolvedHint => h }
+    assert(hints.isEmpty, df.queryExecution.analyzed)
+    df.collect()
+    // the AQE-final plan, descending into query stages
+    val helper = new AdaptiveSparkPlanHelper {}
+    val executed = df.queryExecution.executedPlan
+    def onIds(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.flatMap(_.references.map(_.name)).exists(Set("id_a", "id_b"))
+    val bhj = helper.collect(executed) {
+      case j: BroadcastHashJoinExec if onIds(j.leftKeys) => j
+    }
+    val shuffled = helper.collect(executed) {
+      case j: ShuffledJoin if onIds(j.leftKeys) => j
+    }
+    assert(bhj.size == 2 && shuffled.isEmpty, executed)
+  }
+
   test("h34 geo lookup is a broadcast EQUI-join on the grid cell, not a box NLJ") {
     val p = plan("h34_lat_long_to_country")
     assert(p.contains("BroadcastHashJoin"), p)

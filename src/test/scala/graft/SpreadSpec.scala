@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the r21 optimization devices:
   *
   *  1. Tables.spread — the starved-scan spreader must be (a) a pure
-  *     physical choice (bit-identical results with the knob on/off for
-  *     its consumers) and (b) conditional: identity when the file bytes
-  *     can already feed defaultParallelism splits.
+  *     physical choice (bit-identical results for its consumers whether
+  *     it spreads or takes the identity branch) and (b) conditional:
+  *     identity when the file bytes can already feed defaultParallelism
+  *     splits.
   *  2. LlmOps.shinglesWithCount — the explode_outer/below-Generate
   *     rewrite (which removed a triple evaluation of the shingle
   *     transform) must still equal the defining groupBy(doc_id).count()
@@ -30,20 +31,26 @@ class SpreadSpec extends AnyFunSuite {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      spark.conf.unset(Tables.ScanSpreadKey)
     }
   }
 
   test("spread consumers are bit-identical with the device on and off") {
     withSpark { spark =>
       // j2b (minhashSigs reuses the spread partitioning) and j13 (direct
-      // spread site) — the two device classes
-      Seq("j2b_dedup_minhash", "j13_lang_id").foreach { key =>
-        spark.conf.set(Tables.ScanSpreadKey, "true")
-        val on = SparkEntry.queries(key)(spark, sf).collect().map(_.toString)
-        spark.conf.set(Tables.ScanSpreadKey, "false")
-        val off = SparkEntry.queries(key)(spark, sf).collect().map(_.toString)
-        assert(on.toSeq == off.toSeq, s"$key diverged under the spread knob")
+      // spread site) — the two device classes. A 1 KB maxPartitionBytes
+      // makes every fixture file look large enough to feed the cores, so
+      // spread takes its identity branch.
+      val key = "spark.sql.files.maxPartitionBytes"
+      val prev = spark.conf.get(key)
+      Seq("j2b_dedup_minhash", "j13_lang_id").foreach { q =>
+        val on = SparkEntry.queries(q)(spark, sf).collect().map(_.toString)
+        val off =
+          try {
+            spark.conf.set(key, "1024")
+            SparkEntry.queries(q)(spark, sf).collect().map(_.toString)
+          } finally spark.conf.set(key, prev)
+        assert(on.nonEmpty, s"$q produced no rows — equality check is vacuous")
+        assert(on.toSeq == off.toSeq, s"$q diverged between spread and identity")
       }
     }
   }
@@ -66,11 +73,6 @@ class SpreadSpec extends AnyFunSuite {
         assert(!noSpread.contains("RepartitionByExpression"),
           "a scan with enough splits must pass through untouched")
       } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-      // and the knob is an off-switch
-      spark.conf.set(Tables.ScanSpreadKey, "false")
-      val off = Tables.spread(spark, sf, "documents", df, col("doc_id"))
-        .queryExecution.optimizedPlan.toString
-      assert(!off.contains("RepartitionByExpression"))
     }
   }
 
@@ -96,6 +98,19 @@ class SpreadSpec extends AnyFunSuite {
       } finally {
         new java.io.File(emptyDir, "documents.parquet").delete()
         emptyDir.delete()
+      }
+      // a stattable 0-byte single file is unknown too, not "tiny"
+      val zeroDir = java.nio.file.Files.createTempDirectory("spread").toFile
+      val zeroFile = new java.io.File(zeroDir, "documents.parquet")
+      try {
+        assert(zeroFile.createNewFile() && zeroFile.length == 0L)
+        val p3 = Tables.spread(spark, zeroDir.getAbsolutePath, "documents",
+          df, col("doc_id")).queryExecution.optimizedPlan.toString
+        assert(!p3.contains("RepartitionByExpression"),
+          "a 0-byte single file must not insert a repartition")
+      } finally {
+        zeroFile.delete()
+        zeroDir.delete()
       }
     }
   }

@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.Td
 
 /** CLIENT-API parity layer (SURVEY.md §3 CLIENT rows, §8.2/§8.3): the Scala
@@ -96,7 +97,8 @@ object td {
       * per table. Analyzer/optimizer cost grows with union width, so the
       * catalog is planned in bounded batches: each batch is ONE Spark job
       * over ≤64 tables, and only the tiny (name, n_rows) results are
-      * unioned driver-side. */
+      * unioned driver-side. Schemas come from [[tableSchema]], so over an
+      * unchanged catalog the batches are the only jobs. */
     def tables(db: String, pattern: Option[String] = None)
         (implicit s: SparkSession): DataFrame = {
       import s.implicits._
@@ -107,7 +109,8 @@ object td {
       val batched = names.toSeq.grouped(64).flatMap { batch =>
         batch
           .map { n =>
-            s.read.parquet(Paths.get(root, db, s"$n.parquet").toString)
+            val path = Paths.get(root, db, s"$n.parquet").toString
+            s.read.schema(tableSchema(path)).parquet(path)
               .agg(count(lit(1)).as("n_rows"))
               .select(lit(n).as("name"), col("n_rows"))
           }
@@ -439,19 +442,8 @@ object td {
       // reference default: read_td_table caps at 10,000 rows unless told
       // otherwise (`:: read_td_table`, limit=10000). limit <= 0 disables.
       limit: Int = 10000)(implicit s: SparkSession): DataFrame = {
-    // managed tables carry their schema as sink metadata (toTd writes
-    // _graft_schema.json — the catalog role a real TD/Hive table plays):
-    // reading by metadata instead of file inference keeps an EMPTY table
-    // readable (a partitioned write of zero rows emits no data files, so
-    // inference would fail) and skips footer-sampling on huge tables
-    val sch = schemaPath(engine.tablePath(table))
-    var df =
-      if (java.nio.file.Files.exists(sch))
-        s.read.schema(org.apache.spark.sql.types.DataType.fromJson(
-          new String(java.nio.file.Files.readAllBytes(sch), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(engine.tablePath(table))
-      else s.read.parquet(engine.tablePath(table))
+    val path = engine.tablePath(table)
+    var df = s.read.schema(tableSchema(path)).parquet(path)
     timeRange.foreach { case (from, to) =>
       // accepts ISO dates and 'yyyy-MM-dd HH:mm:ss' datetimes
       def sec(x: String): Long = {
@@ -555,15 +547,58 @@ object td {
   private def schemaPath(tableDir: String): java.nio.file.Path =
     Paths.get(tableDir, "_graft_schema.json")
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  // path → (mtime, nanosAsLong, schema) of each table read without sink
+  // metadata: one entry per path, replaced when either stamp moves
+  private val inferred = new ConcurrentHashMap[String, (Long, String, StructType)]()
+
+  /** The schema a table at `path` is read with, so that building its
+    * DataFrame starts no Spark job. A managed table carries its schema as
+    * sink metadata (toTd writes `_graft_schema.json`, the catalog role a
+    * real TD/Hive table plays): reading by metadata keeps an EMPTY table
+    * readable (a partitioned write of zero rows emits no data files, so
+    * inference would fail) and skips footer sampling on huge tables. Any
+    * other table's schema is inferred once (one Spark job) and re-inferred
+    * only when the path's mtime or the session's `nanosAsLong` changes.
+    * Callers still build `s.read.schema(sch).parquet(path)` on every
+    * call, so the file listing stays fresh: a file added under an
+    * existing `time_bucket=` directory is seen by the next read. */
+  private def tableSchema(path: String)(implicit s: SparkSession): StructType = {
+    val meta = schemaPath(path)
+    if (Files.exists(meta))
+      DataType.fromJson(new String(Files.readAllBytes(meta), "UTF-8"))
+        .asInstanceOf[StructType]
+    else {
+      val mtime = new java.io.File(path).lastModified
+      val nanos = s.conf.get(NanosAsLong, "false")
+      val hit = inferred.get(path)
+      if (hit != null && hit._1 == mtime && hit._2 == nanos) hit._3
+      else {
+        val sch = s.read.parquet(path).schema
+        inferred.put(path, (mtime, nanos, sch))
+        sch
+      }
+    }
+  }
+
+  /** Register each table of the engine's database as a temp view. Views
+    * are rebuilt on every call over a [[tableSchema]] schema: the file
+    * listing is fresh on every query, and a schema is re-inferred only
+    * when its table's mtime or `nanosAsLong` changes, so a query over an
+    * unchanged catalog starts no Spark job here. */
   private def registerTables(engine: TdEngine)(implicit s: SparkSession): Unit = {
     val dir = Paths.get(engine.root, engine.database).toFile
     val flat = new java.io.File(engine.root)
     val files = Option(dir.listFiles()).filter(_.nonEmpty)
       .orElse(Option(flat.listFiles())).getOrElse(Array())
-    files.filter(_.getName.endsWith(".parquet")).foreach { f =>
-      val name = f.getName.stripSuffix(".parquet")
-      if (name == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(f.getPath).createOrReplaceTempView(name)
+      .filter(_.getName.endsWith(".parquet"))
+    // set before any table is read, so every schema of this catalog is
+    // inferred (and stamped) under the same value
+    if (files.exists(_.getName == "events.parquet")) s.conf.set(NanosAsLong, "true")
+    files.foreach { f =>
+      s.read.schema(tableSchema(f.getPath)).parquet(f.getPath)
+        .createOrReplaceTempView(f.getName.stripSuffix(".parquet"))
     }
   }
 }

@@ -106,13 +106,19 @@ object Presto {
     * `date_diff('day', a, b)` → `date_diff(day, a, b)` (ditto date_add/
     * dateadd/datediff/timestampadd/timestampdiff) — the unquoted form
     * parses as native TIMESTAMPDIFF/TIMESTAMPADD with identical
-    * (unit, from, to) semantics. Only the exact token shape
-    * `name('unit',` is touched, so query text is otherwise verbatim. */
+    * (unit, from, to) semantics; and an unsized `AS VARCHAR` (Presto's
+    * unbounded string type in CAST/TRY_CAST, which Spark rejects with
+    * DATATYPE_MISSING_SIZE) → `AS STRING`, leaving `VARCHAR(n)` alone.
+    * Only those exact token shapes are touched, so query text is
+    * otherwise verbatim. */
   private val unitCallRe =
     "(?i)\\b(date_diff|datediff|date_add|dateadd|timestampadd|timestampdiff)\\s*\\(\\s*'(\\w+)'\\s*,".r
+  private val unsizedVarcharRe = "(?i)\\b(AS\\s+)VARCHAR\\b(?!\\s*\\()".r
 
   def rewrite(sql: String): String =
-    unitCallRe.replaceAllIn(sql, m => s"${m.group(1)}(${m.group(2)},")
+    unsizedVarcharRe.replaceAllIn(
+      unitCallRe.replaceAllIn(sql, m => s"${m.group(1)}(${m.group(2)},"),
+      m => s"${m.group(1)}STRING")
 
   /** `spark.sql` with the dialect registered and text shims applied — the
     * passthrough entry `readTdQuery` routes through.

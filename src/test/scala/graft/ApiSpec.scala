@@ -374,6 +374,95 @@ class ApiSpec extends AnyFunSuite {
       Map("i" -> 9)).endsWith("_9"))
   }
 
+  /** Spark jobs started while `body` runs. A listener counts the jobs
+    * between two marker jobs: the listener bus is asynchronous, so the
+    * closing marker's start event is what proves every earlier job of
+    * `body` has been seen. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val token = java.util.UUID.randomUUID().toString
+    val markers = new java.util.concurrent.CountDownLatch(2)
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.marker") == token))
+          markers.countDown()
+        else if (markers.getCount == 1) started.incrementAndGet()
+    }
+    def marker(): Unit = {
+      sc.setLocalProperty("graft.marker", token)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.marker", null)
+    }
+    sc.addSparkListener(counter)
+    try {
+      marker()
+      val out = body
+      marker()
+      assert(markers.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, started.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("a warm readTdQuery over an unchanged catalog starts no Spark job") {
+    val e = td.createEngine("presto:sf0.001", TestSpark.sfRoot)
+    td.readTdQuery("SELECT 1 AS x", e)
+    val (df, jobs) = jobsDuring(
+      td.readTdQuery("SELECT count(*) AS n FROM nation", e))
+    assert(jobs == 0, s"schema inference re-ran: $jobs jobs")
+    assert(df.head().getLong(0) == 25)
+  }
+
+  test("readTdQuery sees toTd appends, replaced columns and rewritten files") {
+    val wh = Files.createTempDirectory("graft_cat").toString
+    val con = td.connect(wh)
+    val e = td.createEngine("presto:cat", wh)
+    val src = spark.read.parquet(s"${TestSpark.sf}/region.parquet")
+    def one(sql: String): Long = td.readTdQuery(sql, e).head().getLong(0)
+    td.toTd(src, "cat.r", con, IfExists.Replace, loadTime = Some(1L))
+    assert(one("SELECT count(*) FROM r") == 5)
+    td.toTd(src, "cat.r", con, IfExists.Append, loadTime = Some(2L))
+    assert(one("SELECT count(*) FROM r") == 10)
+    td.toTd(src.withColumn("extra", lit(7L)), "cat.r", con, IfExists.Replace,
+      loadTime = Some(3L))
+    assert(one("SELECT sum(extra) FROM r") == 35)
+    // an unmanaged table (no sink metadata): its schema is inferred, and
+    // rewriting the file with another schema moves its mtime
+    val raw = s"$wh/cat/u.parquet"
+    spark.range(3).write.parquet(raw)
+    assert(td.readTdQuery("SELECT * FROM u", e).columns.toSeq == Seq("id"))
+    spark.range(3).selectExpr("id", "id * 2 AS twice")
+      .write.mode("overwrite").parquet(raw)
+    assert(one("SELECT sum(twice) FROM u") == 6)
+  }
+
+  test("a schema inferred under one nanosAsLong value is never served under the other") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.LongType
+    // Spark cannot write TIMESTAMP(NANOS), so write it with parquet-mr
+    val root = Files.createTempDirectory("graft_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(s"$root/db/t.parquet")).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1L))
+    finally w.close()
+    val e = td.createEngine("presto:db", root)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def tsType(nanosAsLong: String) = {
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, nanosAsLong)
+      try scala.util.Try(td.readTdTable("t", e).schema("ts").dataType)
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    assert(tsType("true").toOption.contains(LongType))
+    assert(!tsType("false").toOption.contains(LongType))
+    assert(tsType("true").toOption.contains(LongType))
+  }
+
   test("readTdQuery supports td_time_range in passthrough SQL") {
     val e = td.createEngine("presto:sf0.001", "/root/testdata")
     val df = td.readTdQuery(

@@ -36,6 +36,23 @@ class PrestoSpec extends AnyFunSuite {
     assert(Presto.rewrite(s) == s)
   }
 
+  test("unsized VARCHAR casts read as STRING; VARCHAR(n) is left alone") {
+    assert(Presto.rewrite("CAST(x AS VARCHAR)") == "CAST(x AS STRING)")
+    assert(Presto.rewrite("try_cast(x as varchar) AS varchar_col") ==
+      "try_cast(x as STRING) AS varchar_col")
+    assert(Presto.rewrite("CAST(x AS VARCHAR(10))") == "CAST(x AS VARCHAR(10))")
+    // end to end through the facade: Spark alone rejects the unsized form
+    // (DATATYPE_MISSING_SIZE)
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val e = graft.api.td.createEngine("presto:sf0.001", TestSpark.sfRoot)
+    val df = graft.api.td.readTdQuery(
+      "SELECT CAST(n_nationkey AS VARCHAR) AS a, TRY_CAST(n_name AS varchar) AS b, " +
+        "TRY_CAST(n_name AS BIGINT) AS c FROM nation WHERE n_nationkey = 7", e)
+    assert(df.schema.map(_.dataType).take(2) == Seq(StringType, StringType))
+    val r = df.collect().head
+    assert(r.getString(0) == "7" && r.getString(1) == "NATION_7" && r.isNullAt(2))
+  }
+
   test("strpos uses Presto (string, substring) order, 1-based, 0=missing") {
     val r = one("SELECT strpos('hello', 'll') AS a, strpos('hello', 'z') AS b")
     assert(r.getInt(0) == 3 && r.getInt(1) == 0)

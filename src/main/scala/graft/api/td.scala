@@ -1,10 +1,12 @@
 package graft.api
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.Td
@@ -36,6 +38,22 @@ import graft.functions.Td
   * Catalyst sees the complete pruned/filtered/limited plan (the reference
   * achieved the same by splicing SELECT/WHERE/LIMIT into SQL text;
   * `:: read_td_table` is its entire client-side optimizer).
+  *
+  * A table is listed once per change, not once per call. Every read of a
+  * table (temp views, readTdTable, `con.tables`) builds on one relation
+  * per path, memoized under the table's stamp: the session, its
+  * `nanosAsLong`, and the mtimes of the table path and of every directory
+  * under it (see [[relation]]). A file added under an existing
+  * `time_bucket=` directory moves that directory's mtime, so the next
+  * read re-lists; an unchanged table is served without a Spark job.
+  *
+  * Job results are snapshots. Before toTd writes a table it releases
+  * (unpersists) every live job result that reads it, so Spark's
+  * post-write re-cache finds nothing to re-list or re-plan; an Append
+  * leaves each released result returning the rows it returned before
+  * (its executed plan keeps its file list), and a Replace first freezes
+  * each such result (a local checkpoint, served from its cache when that
+  * is loaded), since the overwrite deletes the files it was read from.
   */
 object td {
 
@@ -97,7 +115,7 @@ object td {
       * per table. Analyzer/optimizer cost grows with union width, so the
       * catalog is planned in bounded batches: each batch is ONE Spark job
       * over ≤64 tables, and only the tiny (name, n_rows) results are
-      * unioned driver-side. Schemas come from [[tableSchema]], so over an
+      * unioned driver-side. Tables come from [[relation]], so over an
       * unchanged catalog the batches are the only jobs. */
     def tables(db: String, pattern: Option[String] = None)
         (implicit s: SparkSession): DataFrame = {
@@ -109,8 +127,7 @@ object td {
       val batched = names.toSeq.grouped(64).flatMap { batch =>
         batch
           .map { n =>
-            val path = Paths.get(root, db, s"$n.parquet").toString
-            s.read.schema(tableSchema(path)).parquet(path)
+            relation(Paths.get(root, db, s"$n.parquet").toString)
               .agg(count(lit(1)).as("n_rows"))
               .select(lit(n).as("name"), col("n_rows"))
           }
@@ -404,7 +421,10 @@ object td {
   def issueJob(sql: String, engine: TdEngine)(implicit s: SparkSession): Long =
     cacheJob(runQuery(sql, engine, distributedJoin = false, Map.empty))
 
-  /** `read_td_job(job_id)`: re-serve a completed result without recompute. */
+  /** `read_td_job(job_id)`: re-serve a completed result without recompute.
+    * The result is a snapshot: after a toTd into a table it reads, it
+    * returns the rows it returned before (recomputed from its own file
+    * list after an Append, served from its frozen copy after a Replace). */
   def readTdJob(jobId: Long): DataFrame = {
     val df = jobs.get(jobId)
     require(df != null, s"no such job: $jobId")
@@ -442,8 +462,7 @@ object td {
       // reference default: read_td_table caps at 10,000 rows unless told
       // otherwise (`:: read_td_table`, limit=10000). limit <= 0 disables.
       limit: Int = 10000)(implicit s: SparkSession): DataFrame = {
-    val path = engine.tablePath(table)
-    var df = s.read.schema(tableSchema(path)).parquet(path)
+    var df = relation(engine.tablePath(table))
     timeRange.foreach { case (from, to) =>
       // accepts ISO dates and 'yyyy-MM-dd HH:mm:ss' datetimes
       def sec(x: String): Long = {
@@ -523,6 +542,7 @@ object td {
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, written.schema.json.getBytes("UTF-8"))
     }
+    releaseJobs(out, freeze = ifExists == IfExists.Replace)(df.sparkSession)
     if (partitionByTime) {
       // TD storage model: 1-hour time buckets (SURVEY.md §2.1) — hive-style
       // directory partitioning so time-range scans prune whole buckets
@@ -541,6 +561,41 @@ object td {
       withTime.write.mode(mode).parquet(out)
       writeSchemaMeta(withTime)
     }
+    // drop this table's relation even when its stamp would not move (a
+    // filesystem with coarse mtimes), so the write is seen by the next read
+    relations.remove(out)
+  }
+
+  /** Release every live job result that reads the table at `dir`, before
+    * toTd writes it or when a read finds its stamp moved: unpersisted, so
+    * Spark's post-write `recacheByPath` (one file re-listing and re-plan
+    * per cached result over the path) finds nothing to refresh and no
+    * stale result answers a new query. The handle stays in `jobs` as a
+    * snapshot: its executed plan keeps the file list it was read with,
+    * which an Append leaves intact. An overwrite deletes those files, so
+    * with `freeze` each result is first replaced by a local checkpoint of
+    * itself (read from its cache when that is loaded); a result that
+    * cannot be computed is left as it is, failing as it would have. */
+  private def releaseJobs(dir: String, freeze: Boolean)(implicit s: SparkSession): Unit = {
+    val target = new org.apache.hadoop.fs.Path(dir)
+    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val prefix = fs.makeQualified(target).toString
+    def readsTarget(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.collectWithSubqueries {
+        case l: LogicalRelation => l.relation
+      }.exists {
+        case r: HadoopFsRelation => r.location.rootPaths.exists { p =>
+          val q = fs.makeQualified(p).toString
+          q == prefix || q.startsWith(prefix + "/")
+        }
+        case _ => false
+      }
+    jobs.forEach { (id, df) =>
+      if (readsTarget(df)) {
+        if (freeze) scala.util.Try(df.localCheckpoint()).foreach(jobs.replace(id, df, _))
+        df.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Location of a managed table's schema metadata inside its sink dir. */
@@ -549,44 +604,87 @@ object td {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  // path → (mtime, nanosAsLong, schema) of each table read without sink
-  // metadata: one entry per path, replaced when either stamp moves
-  private val inferred = new ConcurrentHashMap[String, (Long, String, StructType)]()
+  // path → the one relation every read of that table builds on, with the
+  // session and stamp it was listed under: one entry per path, replaced on
+  // a miss
+  private final case class Listed(session: SparkSession, stamp: (String, Vector[Long]),
+      plan: LogicalRelation)
+  private val relations = new ConcurrentHashMap[String, Listed]()
 
-  /** The schema a table at `path` is read with, so that building its
-    * DataFrame starts no Spark job. A managed table carries its schema as
-    * sink metadata (toTd writes `_graft_schema.json`, the catalog role a
-    * real TD/Hive table plays): reading by metadata keeps an EMPTY table
-    * readable (a partitioned write of zero rows emits no data files, so
-    * inference would fail) and skips footer sampling on huge tables. Any
-    * other table's schema is inferred once (one Spark job) and re-inferred
-    * only when the path's mtime or the session's `nanosAsLong` changes.
-    * Callers still build `s.read.schema(sch).parquet(path)` on every
-    * call, so the file listing stays fresh: a file added under an
-    * existing `time_bucket=` directory is seen by the next read. */
-  private def tableSchema(path: String)(implicit s: SparkSession): StructType = {
-    val meta = schemaPath(path)
-    if (Files.exists(meta))
-      DataType.fromJson(new String(Files.readAllBytes(meta), "UTF-8"))
-        .asInstanceOf[StructType]
-    else {
-      val mtime = new java.io.File(path).lastModified
-      val nanos = s.conf.get(NanosAsLong, "false")
-      val hit = inferred.get(path)
-      if (hit != null && hit._1 == mtime && hit._2 == nanos) hit._3
+  /** The relation of the table at `path`, listed once per table stamp: the
+    * session, its `nanosAsLong`, and the mtimes of `path` and of every
+    * directory under it. A file added or removed under an existing
+    * `time_bucket=` directory moves that directory's mtime, so the next
+    * read re-lists and sees it; over an unchanged table, building a read
+    * starts no Spark job (a fresh listing of more than 32 bucket
+    * directories is a parallel-listing job). The stamp is taken before the
+    * listing, so a write racing it can only cause a later miss. toTd drops
+    * its own table's entry, so a write in this process is seen even where
+    * mtimes are coarse. A miss also releases the live job results over the
+    * table (as toTd does before it writes): Spark's cache matches plans by
+    * table path, so a cached result would otherwise answer a later query
+    * with the rows from before a write made outside toTd.
+    *
+    * A managed table carries its schema as sink metadata (toTd writes
+    * `_graft_schema.json`, the catalog role a real TD/Hive table plays):
+    * reading by metadata keeps an EMPTY table readable (a partitioned
+    * write of zero rows emits no data files, so inference would fail) and
+    * skips footer sampling on huge tables. Any other table's schema is
+    * inferred (one Spark job) when its stamp moves.
+    *
+    * Each call returns a new instance of the memoized relation (same file
+    * listing, fresh attribute ids), as a fresh read would, so two reads of
+    * one table can still be joined with each other. */
+  private def relation(path: String)(implicit s: SparkSession): DataFrame = {
+    val stamp = (s.conf.get(NanosAsLong, "false"), listingStamp(path))
+    val hit = relations.get(path)
+    val plan =
+      if (hit != null && (hit.session eq s) && hit.stamp == stamp) hit.plan
       else {
-        val sch = s.read.parquet(path).schema
-        inferred.put(path, (mtime, nanos, sch))
-        sch
+        // the table may have changed under live job results: Spark's cache
+        // would serve them for any equal plan, stale
+        releaseJobs(path, freeze = false)
+        val meta = schemaPath(path)
+        // an unchanged table read from another session keeps its schema
+        val known = Option(hit).filter(_.stamp == stamp).map(_.plan.relation.schema).orElse(
+          Option.when(Files.exists(meta))(DataType.fromJson(
+            new String(Files.readAllBytes(meta), "UTF-8")).asInstanceOf[StructType]))
+        val df = known.fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+        val listed = df.queryExecution.analyzed match { case l: LogicalRelation => l }
+        relations.put(path, Listed(s, stamp, listed))
+        listed
       }
-    }
+    org.apache.spark.sql.GraftSqlBridge.ofRows(s, plan.newInstance())
   }
 
-  /** Register each table of the engine's database as a temp view. Views
-    * are rebuilt on every call over a [[tableSchema]] schema: the file
-    * listing is fresh on every query, and a schema is re-inferred only
-    * when its table's mtime or `nanosAsLong` changes, so a query over an
-    * unchanged catalog starts no Spark job here. */
+  /** mtimes (ns) of `path` and of every directory under it, in walk order:
+    * a driver-side walk (about 1 ms for 100 directories), no Spark job. An
+    * entry that vanishes mid-walk (a concurrent write's `_temporary`)
+    * stamps -1, so the next call misses. */
+  private def listingStamp(path: String): Vector[Long] = {
+    val root = Paths.get(path)
+    val stamp = Vector.newBuilder[Long]
+    def mtime(a: BasicFileAttributes) = a.lastModifiedTime.to(TimeUnit.NANOSECONDS)
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes) = {
+        stamp += mtime(a)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFile(f: Path, a: BasicFileAttributes) = {
+        if (f == root) stamp += mtime(a)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: java.io.IOException) = {
+        stamp += -1L
+        FileVisitResult.CONTINUE
+      }
+    })
+    stamp.result()
+  }
+
+  /** Register each table of the engine's database as a temp view over its
+    * [[relation]]: a table is re-listed only when its stamp moves, so a
+    * query over an unchanged catalog starts no Spark job here. */
   private def registerTables(engine: TdEngine)(implicit s: SparkSession): Unit = {
     val dir = Paths.get(engine.root, engine.database).toFile
     val flat = new java.io.File(engine.root)
@@ -597,8 +695,7 @@ object td {
     // inferred (and stamped) under the same value
     if (files.exists(_.getName == "events.parquet")) s.conf.set(NanosAsLong, "true")
     files.foreach { f =>
-      s.read.schema(tableSchema(f.getPath)).parquet(f.getPath)
-        .createOrReplaceTempView(f.getName.stripSuffix(".parquet"))
+      relation(f.getPath).createOrReplaceTempView(f.getName.stripSuffix(".parquet"))
     }
   }
 }

@@ -463,6 +463,90 @@ class ApiSpec extends AnyFunSuite {
     assert(tsType("true").toOption.contains(LongType))
   }
 
+  /** A fresh warehouse holding `db.ev`: `batch` (400 rows over 40 hours)
+    * written by toTd into 40 `time_bucket=` dirs — more than the 32 above
+    * which Spark lists a table with a parallel-listing job. */
+  private def bucketed(db: String) = {
+    val wh = Files.createTempDirectory("graft_bk").toString
+    val con = td.connect(wh)
+    val batch = spark.range(400).select(col("id"),
+      (lit(1700000000L) + col("id") % 40 * 3600L).as("time"))
+    td.toTd(batch, s"$db.ev", con, IfExists.Replace, partitionByTime = true)
+    (wh, con, td.createEngine(s"presto:$db", wh), batch)
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).toSeq.sorted
+
+  test("readTdJob returns the rows it returned before a toTd Append to its table") {
+    val (_, con, e, batch) = bucketed("snapa")
+    val id = td.issueJob("SELECT id FROM ev WHERE id < 7", e)
+    val before = ids(td.readTdJob(id))
+    td.toTd(batch, "snapa.ev", con, IfExists.Append, partitionByTime = true)
+    assert(ids(td.readTdJob(id)) == before && before.size == 7)
+    assert(td.readTdQuery("SELECT count(*) FROM ev WHERE id < 7", e)
+      .head().getLong(0) == 14)
+  }
+
+  test("readTdJob and jobsList keep results over a table toTd replaces") {
+    val wh = Files.createTempDirectory("graft_rep").toString
+    val con = td.connect(wh)
+    val e = td.createEngine("presto:rep", wh)
+    td.toTd(spark.range(5).toDF("id"), "rep.t", con, IfExists.Replace, loadTime = Some(1L))
+    val read = td.issueJob("SELECT id FROM t", e)
+    val before = ids(td.readTdJob(read))
+    // issued, never collected: computed from the files it would have read
+    val unread = td.issueJob("SELECT id * 10 FROM t", e)
+    td.toTd(spark.range(100, 102).toDF("id"), "rep.t", con, IfExists.Replace,
+      loadTime = Some(2L))
+    assert(ids(td.readTdJob(read)) == before && before == (0L until 5L))
+    assert(ids(td.readTdJob(unread)) == (0L until 50L by 10L))
+    val listed = td.jobsList().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(listed(read) == 5L && listed(unread) == 5L)
+    assert(ids(td.readTdQuery("SELECT id FROM t", e)) == Seq(100L, 101L))
+    // a result that fails when computed does not fail the write (it stays
+    // live and unreadable, so jobsList fails until it is evicted: last)
+    val broken = td.issueJob("SELECT id, raise_error('boom') FROM t", e)
+    td.toTd(spark.range(5).toDF("id"), "rep.t", con, IfExists.Replace, loadTime = Some(3L))
+    intercept[Exception](td.readTdJob(broken).collect())
+  }
+
+  test("toTd's Spark-job count does not grow with live results over its table") {
+    val (_, con, e, batch) = bucketed("cost")
+    def append(): Int = jobsDuring(
+      td.toTd(batch, "cost.ev", con, IfExists.Append, partitionByTime = true))._2
+    val alone = append()
+    (1 to 5).foreach(i => td.readTdQuery(s"SELECT count(*) + $i FROM ev", e).collect())
+    val withLive = append()
+    assert(withLive == alone, s"$alone jobs alone, $withLive with 5 live results")
+  }
+
+  test("a second read of an unchanged bucketed table starts no Spark job") {
+    val (_, _, e, _) = bucketed("warm")
+    td.readTdQuery("SELECT count(*) FROM ev", e)
+    val (q, qJobs) = jobsDuring(td.readTdQuery("SELECT count(*) AS n FROM ev", e))
+    val (t, tJobs) = jobsDuring(td.readTdTable("ev", e, limit = 0))
+    assert(qJobs == 0 && tJobs == 0, s"readTdQuery: $qJobs jobs, readTdTable: $tJobs")
+    assert(q.head().getLong(0) == 400 && t.count() == 400)
+    // two reads of one table still join as two relations
+    val a = td.readTdTable("ev", e, limit = 0)
+    val b = td.readTdTable("ev", e, limit = 0)
+    assert(a.join(b, a("id") === b("id")).count() == 400)
+  }
+
+  test("a file spark.write appends under an existing time_bucket dir is seen by the next read") {
+    val (wh, _, e, _) = bucketed("ext")
+    assert(td.readTdTable("ev", e, limit = 0).count() == 400)
+    assert(td.readTdQuery("SELECT count(*) FROM ev", e).head().getLong(0) == 400)
+    val dir = new java.io.File(s"$wh/ext/ev.parquet").listFiles()
+      .filter(_.getName.startsWith("time_bucket=")).minBy(_.getName)
+    spark.range(3).select(col("id"), lit(1700000000L).as("time"))
+      .write.mode("append").parquet(dir.getPath)
+    assert(td.readTdTable("ev", e, limit = 0).count() == 403)
+    assert(td.readTdQuery("SELECT count(*) FROM ev WHERE id >= 0", e)
+      .head().getLong(0) == 403)
+  }
+
   test("readTdQuery supports td_time_range in passthrough SQL") {
     val e = td.createEngine("presto:sf0.001", "/root/testdata")
     val df = td.readTdQuery(

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Shared table loaders + cross-engine determinism helpers.
   *
@@ -20,7 +25,116 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    relation(spark, s"$dir/$name.parquet")
+
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  // path → the one relation every read of that table builds on, with the
+  // session and stamp it was listed under: one entry per path, replaced on
+  // a miss, least recently read first out
+  private final case class Listed(session: SparkSession, stamp: (String, Vector[Long]),
+      plan: LogicalRelation)
+  private[graft] val MaxListed = 256
+  private val listed = new java.util.LinkedHashMap[String, Listed](64, 0.75f, true)
+  private val relistHooks =
+    new java.util.concurrent.CopyOnWriteArrayList[(SparkSession, String) => Unit]()
+
+  /** Run `hook(session, path)` whenever [[relation]] is about to re-list
+    * a table (a miss), before it lists: a holder of results computed over
+    * that table can release them before the new listing is served. */
+  def onRelist(hook: (SparkSession, String) => Unit): Unit = relistHooks.add(hook)
+
+  /** Forget the relation of `path`, so the next read lists it afresh even
+    * where its stamp would not move (a file system with coarse mtimes). */
+  def forget(path: String): Unit = listed.synchronized(listed.remove(path))
+
+  /** The paths the memo holds a relation for. */
+  private[graft] def memoized: Set[String] =
+    listed.synchronized(listed.keySet().asScala.toSet)
+
+  /** Location of a managed table's schema metadata inside its dir: the
+    * underscore prefix keeps it out of Spark's parquet listing. */
+  def schemaPath(tableDir: String): Path = Paths.get(tableDir, "_graft_schema.json")
+
+  /** The relation of the table at `path`, listed once per table stamp: the
+    * session, its `nanosAsLong`, and the mtimes of `path` and of every
+    * directory under it. A file added or removed under a directory moves
+    * that directory's mtime, and a rewritten single-file table moves its
+    * own, so the next read re-lists and sees it; over an unchanged table,
+    * building a read starts no Spark job (a fresh `spark.read.parquet`
+    * infers the schema with one job, and lists more than 32 directories
+    * with another). The stamp is taken before the listing, so a write
+    * racing it can only cause a later miss. Every miss runs the
+    * [[onRelist]] hooks first.
+    *
+    * Schema: the previous entry's when only the session changed, else
+    * `_graft_schema.json` when the table carries it (written by `td.toTd`,
+    * the catalog role a real TD/Hive table plays: it keeps an EMPTY
+    * partitioned table readable and skips footer sampling), else inferred.
+    *
+    * The memo holds at most 256 tables. A miss drops the entries whose
+    * path is gone or whose session has stopped, then the least recently
+    * read ones beyond the cap, so sweeps over thousands of scratch tables
+    * and restarted sessions hold no listing or session alive.
+    *
+    * Each call returns a new instance of the memoized relation (same file
+    * listing, fresh attribute ids), as a fresh read would, so two reads of
+    * one table can still be joined with each other. */
+  def relation(s: SparkSession, path: String): DataFrame = {
+    val stamp = (s.conf.get(NanosAsLong, "false"), listingStamp(path))
+    val hit = listed.synchronized(listed.get(path))
+    val plan =
+      if (hit != null && (hit.session eq s) && hit.stamp == stamp && !stamp._2.contains(-1L))
+        hit.plan
+      else {
+        relistHooks.forEach(_(s, path))
+        val meta = schemaPath(path)
+        // an unchanged table read from another session keeps its schema
+        val known = Option(hit).filter(_.stamp == stamp).map(_.plan.relation.schema).orElse(
+          Option.when(Files.exists(meta))(DataType.fromJson(
+            new String(Files.readAllBytes(meta), "UTF-8")).asInstanceOf[StructType]))
+        val df = known.fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+        val l = df.queryExecution.analyzed match { case l: LogicalRelation => l }
+        remember(path, Listed(s, stamp, l))
+        l
+      }
+    org.apache.spark.sql.GraftSqlBridge.ofRows(s, plan.newInstance())
+  }
+
+  private def remember(path: String, entry: Listed): Unit = listed.synchronized {
+    listed.remove(path)
+    listed.entrySet().removeIf(e =>
+      e.getValue.session.sparkContext.isStopped || !Files.exists(Paths.get(e.getKey)))
+    val lru = listed.keySet().iterator()
+    while (listed.size >= MaxListed) { lru.next(); lru.remove() }
+    listed.put(path, entry)
+  }
+
+  /** mtimes (ns) of `path` and of every directory under it, in walk order:
+    * a driver-side walk (about 1 ms for 100 directories), no Spark job. An
+    * entry that vanishes mid-walk (a concurrent write's `_temporary`)
+    * stamps -1, and a stamp holding -1 never hits: a path this walk cannot
+    * see (not on the local file system) is listed on every read. */
+  private def listingStamp(path: String): Vector[Long] = {
+    val root = Paths.get(path)
+    val stamp = Vector.newBuilder[Long]
+    def mtime(a: BasicFileAttributes) = a.lastModifiedTime.to(TimeUnit.NANOSECONDS)
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes) = {
+        stamp += mtime(a)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFile(f: Path, a: BasicFileAttributes) = {
+        if (f == root) stamp += mtime(a)
+        FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: java.io.IOException) = {
+        stamp += -1L
+        FileVisitResult.CONTINUE
+      }
+    })
+    stamp.result()
+  }
 
   /** events.ts has shipped as two physical types across fixture
     * generations: parquet TIMESTAMP(NANOS) (read as LongType epoch-nanos
@@ -33,7 +147,7 @@ object Tables {
     * [[graft.functions.Td.tdTimeRangeEvents]], which does the same dispatch.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NanosAsLong, "true")
     val raw = t(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => // legacy epoch-nanos fixture

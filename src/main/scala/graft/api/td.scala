@@ -1,14 +1,13 @@
 package graft.api
 
-import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
-import java.nio.file.attribute.BasicFileAttributes
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import graft.Tables
 import graft.functions.Td
 
 /** CLIENT-API parity layer (SURVEY.md §3 CLIENT rows, §8.2/§8.3): the Scala
@@ -40,12 +39,16 @@ import graft.functions.Td
   * `:: read_td_table` is its entire client-side optimizer).
   *
   * A table is listed once per change, not once per call. Every read of a
-  * table (temp views, readTdTable, `con.tables`) builds on one relation
-  * per path, memoized under the table's stamp: the session, its
-  * `nanosAsLong`, and the mtimes of the table path and of every directory
-  * under it (see [[relation]]). A file added under an existing
-  * `time_bucket=` directory moves that directory's mtime, so the next
-  * read re-lists; an unchanged table is served without a Spark job.
+  * table (temp views, readTdTable, `con.tables`) builds on the engine's
+  * one relation memo, [[graft.Tables.relation]], which the operator
+  * registry's `Tables.t` reads through too: one relation per path, kept
+  * under the table's stamp (the session, its `nanosAsLong`, and the mtimes
+  * of the table path and of every directory under it). A file added under
+  * an existing `time_bucket=` directory moves that directory's mtime, so
+  * the next read re-lists; an unchanged table is served without a Spark
+  * job. Whenever the memo re-lists a table, whoever read it, td first
+  * releases its live job results over that table (see [[releaseJobs]]);
+  * toTd drops its table's entry after writing.
   *
   * Job results are snapshots. Before toTd writes a table it releases
   * (unpersists) every live job result that reads it, so Spark's
@@ -115,8 +118,8 @@ object td {
       * per table. Analyzer/optimizer cost grows with union width, so the
       * catalog is planned in bounded batches: each batch is ONE Spark job
       * over ≤64 tables, and only the tiny (name, n_rows) results are
-      * unioned driver-side. Tables come from [[relation]], so over an
-      * unchanged catalog the batches are the only jobs. */
+      * unioned driver-side. Tables come from [[graft.Tables.relation]], so
+      * over an unchanged catalog the batches are the only jobs. */
     def tables(db: String, pattern: Option[String] = None)
         (implicit s: SparkSession): DataFrame = {
       import s.implicits._
@@ -127,7 +130,7 @@ object td {
       val batched = names.toSeq.grouped(64).flatMap { batch =>
         batch
           .map { n =>
-            relation(Paths.get(root, db, s"$n.parquet").toString)
+            Tables.relation(s, Paths.get(root, db, s"$n.parquet").toString)
               .agg(count(lit(1)).as("n_rows"))
               .select(lit(n).as("name"), col("n_rows"))
           }
@@ -462,7 +465,7 @@ object td {
       // reference default: read_td_table caps at 10,000 rows unless told
       // otherwise (`:: read_td_table`, limit=10000). limit <= 0 disables.
       limit: Int = 10000)(implicit s: SparkSession): DataFrame = {
-    var df = relation(engine.tablePath(table))
+    var df = Tables.relation(s, engine.tablePath(table))
     timeRange.foreach { case (from, to) =>
       // accepts ISO dates and 'yyyy-MM-dd HH:mm:ss' datetimes
       def sec(x: String): Long = {
@@ -538,7 +541,7 @@ object td {
     def writeSchemaMeta(written: DataFrame): Unit = {
       // sink metadata (see readTdTable): the underscore prefix keeps the
       // file invisible to Spark's parquet listing, like _SUCCESS
-      val p = schemaPath(out)
+      val p = Tables.schemaPath(out)
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, written.schema.json.getBytes("UTF-8"))
     }
@@ -563,11 +566,11 @@ object td {
     }
     // drop this table's relation even when its stamp would not move (a
     // filesystem with coarse mtimes), so the write is seen by the next read
-    relations.remove(out)
+    Tables.forget(out)
   }
 
   /** Release every live job result that reads the table at `dir`, before
-    * toTd writes it or when a read finds its stamp moved: unpersisted, so
+    * toTd writes it or when the relation memo re-lists it: unpersisted, so
     * Spark's post-write `recacheByPath` (one file re-listing and re-plan
     * per cached result over the path) finds nothing to refresh and no
     * stale result answers a new query. The handle stays in `jobs` as a
@@ -598,92 +601,15 @@ object td {
     }
   }
 
-  /** Location of a managed table's schema metadata inside its sink dir. */
-  private def schemaPath(tableDir: String): java.nio.file.Path =
-    Paths.get(tableDir, "_graft_schema.json")
-
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
-  // path → the one relation every read of that table builds on, with the
-  // session and stamp it was listed under: one entry per path, replaced on
-  // a miss
-  private final case class Listed(session: SparkSession, stamp: (String, Vector[Long]),
-      plan: LogicalRelation)
-  private val relations = new ConcurrentHashMap[String, Listed]()
-
-  /** The relation of the table at `path`, listed once per table stamp: the
-    * session, its `nanosAsLong`, and the mtimes of `path` and of every
-    * directory under it. A file added or removed under an existing
-    * `time_bucket=` directory moves that directory's mtime, so the next
-    * read re-lists and sees it; over an unchanged table, building a read
-    * starts no Spark job (a fresh listing of more than 32 bucket
-    * directories is a parallel-listing job). The stamp is taken before the
-    * listing, so a write racing it can only cause a later miss. toTd drops
-    * its own table's entry, so a write in this process is seen even where
-    * mtimes are coarse. A miss also releases the live job results over the
-    * table (as toTd does before it writes): Spark's cache matches plans by
-    * table path, so a cached result would otherwise answer a later query
-    * with the rows from before a write made outside toTd.
-    *
-    * A managed table carries its schema as sink metadata (toTd writes
-    * `_graft_schema.json`, the catalog role a real TD/Hive table plays):
-    * reading by metadata keeps an EMPTY table readable (a partitioned
-    * write of zero rows emits no data files, so inference would fail) and
-    * skips footer sampling on huge tables. Any other table's schema is
-    * inferred (one Spark job) when its stamp moves.
-    *
-    * Each call returns a new instance of the memoized relation (same file
-    * listing, fresh attribute ids), as a fresh read would, so two reads of
-    * one table can still be joined with each other. */
-  private def relation(path: String)(implicit s: SparkSession): DataFrame = {
-    val stamp = (s.conf.get(NanosAsLong, "false"), listingStamp(path))
-    val hit = relations.get(path)
-    val plan =
-      if (hit != null && (hit.session eq s) && hit.stamp == stamp) hit.plan
-      else {
-        // the table may have changed under live job results: Spark's cache
-        // would serve them for any equal plan, stale
-        releaseJobs(path, freeze = false)
-        val meta = schemaPath(path)
-        // an unchanged table read from another session keeps its schema
-        val known = Option(hit).filter(_.stamp == stamp).map(_.plan.relation.schema).orElse(
-          Option.when(Files.exists(meta))(DataType.fromJson(
-            new String(Files.readAllBytes(meta), "UTF-8")).asInstanceOf[StructType]))
-        val df = known.fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
-        val listed = df.queryExecution.analyzed match { case l: LogicalRelation => l }
-        relations.put(path, Listed(s, stamp, listed))
-        listed
-      }
-    org.apache.spark.sql.GraftSqlBridge.ofRows(s, plan.newInstance())
-  }
-
-  /** mtimes (ns) of `path` and of every directory under it, in walk order:
-    * a driver-side walk (about 1 ms for 100 directories), no Spark job. An
-    * entry that vanishes mid-walk (a concurrent write's `_temporary`)
-    * stamps -1, so the next call misses. */
-  private def listingStamp(path: String): Vector[Long] = {
-    val root = Paths.get(path)
-    val stamp = Vector.newBuilder[Long]
-    def mtime(a: BasicFileAttributes) = a.lastModifiedTime.to(TimeUnit.NANOSECONDS)
-    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
-      override def preVisitDirectory(d: Path, a: BasicFileAttributes) = {
-        stamp += mtime(a)
-        FileVisitResult.CONTINUE
-      }
-      override def visitFile(f: Path, a: BasicFileAttributes) = {
-        if (f == root) stamp += mtime(a)
-        FileVisitResult.CONTINUE
-      }
-      override def visitFileFailed(f: Path, e: java.io.IOException) = {
-        stamp += -1L
-        FileVisitResult.CONTINUE
-      }
-    })
-    stamp.result()
-  }
+  // a table whose listing moved may have changed under live job results:
+  // Spark's cache matches plans by table path, so a cached result would
+  // otherwise answer a later query with the rows from before a write made
+  // outside toTd
+  Tables.onRelist((s, path) => releaseJobs(path, freeze = false)(s))
 
   /** Register each table of the engine's database as a temp view over its
-    * [[relation]]: a table is re-listed only when its stamp moves, so a
+    * memoized relation ([[graft.Tables.relation]]): a table is re-listed
+    * only when its stamp moves, so a
     * query over an unchanged catalog starts no Spark job here. */
   private def registerTables(engine: TdEngine)(implicit s: SparkSession): Unit = {
     val dir = Paths.get(engine.root, engine.database).toFile
@@ -693,9 +619,9 @@ object td {
       .filter(_.getName.endsWith(".parquet"))
     // set before any table is read, so every schema of this catalog is
     // inferred (and stamped) under the same value
-    if (files.exists(_.getName == "events.parquet")) s.conf.set(NanosAsLong, "true")
+    if (files.exists(_.getName == "events.parquet")) s.conf.set(Tables.NanosAsLong, "true")
     files.foreach { f =>
-      relation(f.getPath).createOrReplaceTempView(f.getName.stripSuffix(".parquet"))
+      Tables.relation(s, f.getPath).createOrReplaceTempView(f.getName.stripSuffix(".parquet"))
     }
   }
 }

@@ -75,6 +75,24 @@ object Streams {
     * stores per partition) that dominates these keys at fixture scale
     * (scaling ratio ≈ 1 at 8 vs 32 cores in PERF_r21).
     *
+    * Feed before start. Such a harness adds every row to its
+    * MemoryStream(s) BEFORE `start()`, so the first trigger's offsets
+    * cover all of them. Fed after `start()`, the two `addData` calls of a
+    * stream-stream join race the first trigger: i8 was seen running its
+    * left rows in one batch and its right rows in the next (1000/1000/0
+    * rows), in 6 of 25 runs at sf0.001 and in every run at sf0.1.
+    *
+    * The sentinel rides the data batch. A harness that needs a
+    * far-future sentinel to close windows or fire timers (i7, i10, i21,
+    * i22, i23, i26) feeds it with the data. A batch reads the watermark
+    * the batch before it computed, so the data batch drops, evicts and
+    * times out nothing; it ends by moving the watermark to the sentinel,
+    * and Spark's own no-data batch then applies it (evictions, null
+    * extensions, timeouts, timers). Two batches in all; no explicit empty
+    * flush. i8 (inner join: rows are emitted on match, never on eviction)
+    * turns that no-data batch off, since `stop()` would discard its
+    * evictions anyway: one batch.
+    *
     * Why output is row-identical under any split of the events, per key
     * class:
     *  - collectEvents sorts by (ts_ms, event_id), so a later part is
@@ -94,38 +112,63 @@ object Streams {
     *    batch sorted by (ts_ms, event_id); state carries the fold across
     *    batch boundaries, so folding one batch computes the same
     *    sessions/counters/top-k; timer-driven final flushes come from the
-    *    sentinel either way.
+    *    sentinel either way (it is its own key, user −1, filtered from the
+    *    graded output).
     * Keys whose multi-batch shape IS the semantics keep it: i4 (late rows
     * must arrive after the watermark advanced), i13/i25/i27 (re-sends
     * must land in a later batch than the original). */
 
-  /** Run `body` with a low shuffle-partition count, restoring the session
-    * conf after. Stateful streaming cost scales with partitions — every
-    * micro-batch commits one state-store delta per shuffle partition (×4
-    * stores for a stream-stream join), so 32 partitions over a few thousand
-    * rows is pure overhead: the driver's round-1 bench spent ~44 s across
-    * i4/i5/i7/i8 mostly on state-store churn. The partition count is pinned
-    * per-checkpoint, and these harnesses create a fresh checkpoint per run,
-    * so lowering it here is safe and invisible to batch queries. On a real
-    * cluster ingesting 100 TB/day the same knob goes UP with state size —
-    * the point is that it's sized to the state, not inherited from batch. */
-  /** Streaming queries run with FEW shuffle partitions: state-store count
-    * is partitions × stores-per-operator (a stream-stream join keeps 4
-    * stores per partition), and every micro-batch pays a per-store
-    * open/commit — at fixture scale that fixed cost dominates the actual
-    * join work, and at 100 TB an operator retunes it upward with real
-    * key cardinality. Runtime-tunable (`spark.graft.stream.shufflePartitions`)
-    * for exactly that retune; the default preserves each operator's
-    * graded geometry. */
+  /** Run `body` with `n` shuffle partitions (the state partitions of the
+    * streams it starts), restoring the session conf after. State-store
+    * count is partitions × stores per operator (a stream-stream join keeps
+    * 4 stores per partition) and every micro-batch opens and commits each
+    * store, so at fixture scale that fixed cost dominates the actual work.
+    * The count is pinned per checkpoint, and these harnesses create a
+    * fresh checkpoint per run, so setting it here is invisible to batch
+    * queries and to output.
+    *
+    * Size rule: [[statePartitions]] — one partition per
+    * [[RowsPerStatePartition]] input events, at least 1, at most the
+    * session's `spark.sql.shuffle.partitions` — for the keys that size
+    * their state from their input (i8, i21, i26); the others keep a fixed
+    * `n`. `spark.graft.stream.shufflePartitions`, when set, overrides
+    * either: an operator retunes it with real key cardinality. */
   val StreamShufflePartitionsKey = "spark.graft.stream.shufflePartitions"
   private def withFewShufflePartitions[T](s: SparkSession, n: Int = 4)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
     val eff = s.conf.getOption(StreamShufflePartitionsKey)
       .map(_.trim.toInt).getOrElse(n)
     require(eff >= 1, s"$StreamShufflePartitionsKey must be >= 1, got $eff")
-    s.conf.set(key, eff.toString)
-    try body finally s.conf.set(key, prev)
+    withConf(s, "spark.sql.shuffle.partitions", eff.toString)(body)
+  }
+
+  /** Input events per state partition, from i8 and i21 runs on 4 cores
+    * (warm, 3 runs each, 2 JVMs per setting). At 10k events (sf0.01) one
+    * partition was fastest: i8 1.6–2.5 s against 1.5–2.4 s on two and
+    * 2.0–2.7 s on four, i21 1.9–2.3 s against 2.2–2.5 s and 2.6–3.0 s.
+    * At 1k, one partition beat two (i8 0.89 s vs 0.92–1.0 s); at 100k,
+    * four beat two and two beat one (i8 2.5 s, 2.9–3.2 s, 5.2 s). 25k is
+    * the largest size that still gives 100k events four partitions. */
+  val RowsPerStatePartition = 25000L
+
+  /** State partitions for a stream of `rows` events: one per
+    * [[RowsPerStatePartition]], at least 1, at most `cap`. */
+  def statePartitions(rows: Long, cap: Int): Int =
+    math.max(1L, math.min(cap.toLong,
+      (rows + RowsPerStatePartition - 1) / RowsPerStatePartition)).toInt
+
+  /** `body` over the events of `d`, under [[withFewShufflePartitions]]
+    * sized for them by [[statePartitions]]. */
+  private def withSizedState[T](s: SparkSession, d: String)(body: Array[Ev] => T): T = {
+    val evs = collectEvents(s, d)
+    withFewShufflePartitions(s,
+      statePartitions(evs.length, s.conf.get("spark.sql.shuffle.partitions").toInt))(body(evs))
+  }
+
+  /** Run `body` with session conf `key` set to `value`, restoring it after. */
+  private def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
   /** i4 — 1-hour watermark, append mode, hourly tumbling windows. Data
@@ -314,15 +357,15 @@ object Streams {
             closed.result()
           }
       }
+    // one data batch with the sentinel, fed before start (see "One data
+    // batch"): the state fold over the (ts, id)-sorted batch computes the
+    // same sessions in one pass; the sentinel moves the watermark +1y, so
+    // the no-data batch after it times out every open session
+    stream.addData((evs :+ sentinel).toSeq)
     val qn = "i7_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = sessions.toDF("sess_start", "user_id", "n_events")
       .writeStream.outputMode("append").format("memory").queryName(qn)
       .option("checkpointLocation", tmp("i7ck")).start()
-    // one data batch (see "One data batch"): the state fold over
-    // the (ts, id)-sorted batch computes the same sessions in one pass
-    stream.addData(evs.toSeq)
-    q.processAllAvailable()
-    stream.addData(Seq(sentinel)) // watermark → +1y: every open session times out
     q.processAllAvailable()
     q.stop()
     s.table(qn).where(col("user_id") =!= -1L)
@@ -410,14 +453,13 @@ object Streams {
         .transformWithState(new SessionProcessor(gapMs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Append())
+      // the i7 feed: data plus sentinel in one batch before start; every
+      // timer fires in the no-data batch after it
+      stream.addData((evs :+ sentinel).toSeq)
       val qn = "i10_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
       val q = sessions.toDF("sess_start", "user_id", "n_events")
         .writeStream.outputMode("append").format("memory").queryName(qn)
         .option("checkpointLocation", tmp("i10ck")).start()
-      // one data batch — same fold as i7 (see "One data batch")
-      stream.addData(evs.toSeq)
-      q.processAllAvailable()
-      stream.addData(Seq(sentinel)) // advance watermark: all timers fire
       q.processAllAvailable()
       q.stop()
       s.table(qn).where(col("user_id") =!= -1L)
@@ -436,10 +478,9 @@ object Streams {
     * once the other's watermark passes the interval — bounded state on an
     * unbounded stream. Event time is ms-precision (`timestamp_millis`) so
     * the join boundary is exactly DuckDB's epoch_ms arithmetic (oracle). */
-  def i8(s: SparkSession, d: String): DataFrame = withFewShufflePartitions(s) {
+  def i8(s: SparkSession, d: String): DataFrame = withSizedState(s, d) { evs =>
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evs = collectEvents(s, d)
     val ls = MemoryStream[Ev]; val rs = MemoryStream[Ev]
     def side(m: MemoryStream[Ev], p: String) = m.toDF()
       .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
@@ -451,12 +492,17 @@ object Streams {
         && col("b_t") <= col("a_t") + expr("INTERVAL 5 MINUTES")
         && col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id"), col("a_user").as("user_id"))
-    val qn = "i8_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = joined.writeStream.outputMode("append").format("memory")
-      .queryName(qn).option("checkpointLocation", tmp("i8ck")).start()
-    // one micro-batch (see "One data batch"): an inner interval
-    // join emits on match only, so the output set is batching-invariant
+    // one micro-batch, fed before start (see "One data batch"): an inner
+    // interval join emits on match only, so the output set is
+    // batching-invariant
     ls.addData(evs.toSeq); rs.addData(evs.toSeq)
+    val qn = "i8_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    // no eviction-only no-data batch: its evictions emit nothing here, and
+    // stop() discards them
+    val q = withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      joined.writeStream.outputMode("append").format("memory")
+        .queryName(qn).option("checkpointLocation", tmp("i8ck")).start()
+    }
     q.processAllAvailable()
     q.stop()
     s.table(qn).orderBy("a_id", "b_id")
@@ -475,10 +521,9 @@ object Streams {
     * provably close inside the test — production streams close them with
     * ordinary traffic. Output == the batch LEFT JOIN (oracle; NULL
     * ordering pinned on both engines). */
-  def i21(s: SparkSession, d: String): DataFrame = withFewShufflePartitions(s) {
+  def i21(s: SparkSession, d: String): DataFrame = withSizedState(s, d) { evs =>
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evs = collectEvents(s, d)
     val ls = MemoryStream[Ev]; val rs = MemoryStream[Ev]
     def side(m: MemoryStream[Ev], p: String) = m.toDF()
       .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
@@ -494,18 +539,12 @@ object Streams {
           && col("a_id") =!= col("b_id"),
         "leftOuter")
       .select(col("a_id"), col("b_id"), col("a_user").as("user_id"))
-    val qn = "i21_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = joined.writeStream.outputMode("append").format("memory")
-      .queryName(qn).option("checkpointLocation", tmp("i21ck")).start()
-    // one data batch (see "One data batch"): null-extension is
-    // an eviction-time decision the watermark makes identically under
-    // any batching of time-ordered input; the sentinel protocol below
-    // still closes every window
-    ls.addData(evs.toSeq); rs.addData(evs.toSeq)
-    q.processAllAvailable()
-    // close every open window: two sentinel batches (watermark advances at
-    // batch END, state evicts the batch after) far past max(ts) + interval.
-    // The sentinel must survive the right side's type filter — the
+    // one data batch with the sentinel, fed before start (see "One data
+    // batch"): null-extension is an eviction-time decision the watermark
+    // makes identically under any batching of time-ordered input. The
+    // sentinel, far past max(ts) + interval, moves the watermark at the
+    // data batch's end, and Spark's no-data batch after it evicts every
+    // real row. It must survive the right side's type filter — the
     // watermark node sits ABOVE it, so a filtered-out sentinel would
     // advance only the left watermark and the global (min) watermark
     // would never close the last windows (measured: the tail 9 null rows
@@ -513,12 +552,10 @@ object Streams {
     // and is filtered from the graded output.
     val far = evs.map(_.ts_ms).maxOption.getOrElse(0L) + 3600 * 1000L
     val sent = Ev(-1L, far, -1L, "click", 0.0)
-    ls.addData(Seq(sent)); rs.addData(Seq(sent))
-    q.processAllAvailable()
-    // the watermark computed from the sentinel batch is applied in the
-    // NEXT micro-batch — an empty second pass flushes the evictions
-    // without paying another data batch
-    ls.addData(Seq.empty[Ev]); rs.addData(Seq.empty[Ev])
+    ls.addData((evs :+ sent).toSeq); rs.addData((evs :+ sent).toSeq)
+    val qn = "i21_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val q = joined.writeStream.outputMode("append").format("memory")
+      .queryName(qn).option("checkpointLocation", tmp("i21ck")).start()
     q.processAllAvailable()
     q.stop()
     s.table(qn).where(col("user_id") =!= -1L)
@@ -535,10 +572,9 @@ object Streams {
     * user −1 so its own null-extended emissions are filtered from the
     * graded output. Output == the batch FULL JOIN (oracle; NULL ordering
     * pinned on both engines). */
-  def i26(s: SparkSession, d: String): DataFrame = withFewShufflePartitions(s) {
+  def i26(s: SparkSession, d: String): DataFrame = withSizedState(s, d) { evs =>
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evs = collectEvents(s, d)
     val ls = MemoryStream[Ev]; val rs = MemoryStream[Ev]
     def side(m: MemoryStream[Ev], p: String) = m.toDF()
       .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
@@ -555,21 +591,15 @@ object Streams {
         "fullOuter")
       .select(col("a_id"), col("b_id"),
         coalesce(col("a_user"), col("b_user")).as("user_id"))
+    // the i21 feed, for both sides: data plus one far-future click in one
+    // batch before start; the no-data batch after it evicts (and
+    // null-extends) every real row
+    val far = evs.map(_.ts_ms).maxOption.getOrElse(0L) + 3600 * 1000L
+    val sent = Ev(-1L, far, -1L, "click", 0.0)
+    ls.addData((evs :+ sent).toSeq); rs.addData((evs :+ sent).toSeq)
     val qn = "i26_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = joined.writeStream.outputMode("append").format("memory")
       .queryName(qn).option("checkpointLocation", tmp("i26ck")).start()
-    // one data batch — the i21 argument applies to both sides
-    ls.addData(evs.toSeq); rs.addData(evs.toSeq)
-    q.processAllAvailable()
-    // the i21 sentinel protocol: one far-future click on both sides
-    // advances the global watermark past every real window, then an empty
-    // pass applies it (eviction lands in the batch AFTER the one that
-    // computed the new watermark)
-    val far = evs.map(_.ts_ms).maxOption.getOrElse(0L) + 3600 * 1000L
-    val sent = Ev(-1L, far, -1L, "click", 0.0)
-    ls.addData(Seq(sent)); rs.addData(Seq(sent))
-    q.processAllAvailable()
-    ls.addData(Seq.empty[Ev]); rs.addData(Seq.empty[Ev])
     q.processAllAvailable()
     q.stop()
     s.table(qn).where(col("user_id") =!= -1L)
@@ -1282,15 +1312,13 @@ object Streams {
         .transformWithState(new TypeCountProcessor(endTs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Append())
+      // the i7 feed (per-type counters are additive across any batching
+      // of the input): data plus sentinel in one batch before start
+      stream.addData((evs :+ sentinel).toSeq)
       val qn = "i23_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
       val q = counted.toDF("user_id", "event_type", "n")
         .writeStream.outputMode("append").format("memory").queryName(qn)
         .option("checkpointLocation", tmp("i23ck")).start()
-      // one data batch: per-type counters are additive across any
-      // batching of the input
-      stream.addData(evs.toSeq)
-      q.processAllAvailable()
-      stream.addData(Seq(sentinel))
       q.processAllAvailable()
       q.stop()
       s.table(qn).where(col("user_id") =!= -1L)
@@ -1334,15 +1362,14 @@ object Streams {
         .transformWithState(new TopKProcessor(3, endTs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Append())
+      // the i7 feed (top-k insertion is associative, so the
+      // merge-then-truncate state reaches the same final ranking): data
+      // plus sentinel in one batch before start
+      stream.addData((evs :+ sentinel).toSeq)
       val qn = "i22_out_" + java.util.UUID.randomUUID.toString.replace("-", "")
       val q = ranked.toDF("user_id", "rank", "value")
         .writeStream.outputMode("append").format("memory").queryName(qn)
         .option("checkpointLocation", tmp("i22ck")).start()
-      // one data batch: top-k insertion is associative, so the
-      // merge-then-truncate state reaches the same final ranking
-      stream.addData(evs.toSeq)
-      q.processAllAvailable()
-      stream.addData(Seq(sentinel)) // watermark past endTs: timers fire
       q.processAllAvailable()
       q.stop()
       s.table(qn).where(col("user_id") =!= -1L)

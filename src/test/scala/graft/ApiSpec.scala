@@ -547,6 +547,53 @@ class ApiSpec extends AnyFunSuite {
       .head().getLong(0) == 403)
   }
 
+  test("a warm Tables.t read of an unchanged table starts no Spark job") {
+    Tables.t(spark, TestSpark.sf, "nation")
+    val (df, jobs) = jobsDuring(Tables.t(spark, TestSpark.sf, "nation"))
+    assert(jobs == 0, s"the read started $jobs jobs")
+    assert(df.count() == 25)
+  }
+
+  test("a rewritten fixture file is seen by the next Tables.t read") {
+    import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+    val dir = Files.createTempDirectory("graft_fix")
+    val file = dir.resolve("t.parquet")
+    Files.copy(java.nio.file.Paths.get(s"${TestSpark.sf}/region.parquet"), file)
+    assert(Tables.t(spark, dir.toString, "t").count() == 5)
+    Files.copy(java.nio.file.Paths.get(s"${TestSpark.sf}/nation.parquet"), file,
+      REPLACE_EXISTING)
+    val after = Tables.t(spark, dir.toString, "t")
+    assert(after.columns.contains("n_nationkey") && after.count() == 25)
+  }
+
+  test("the relation memo drops tables that are gone and keeps at most its cap") {
+    // one small managed table (schema metadata: no inference job per read),
+    // copied into one directory per table
+    val base = Files.createTempDirectory("graft_memo")
+    val src = base.resolve("src").toString
+    spark.range(3).coalesce(1).write.parquet(src)
+    val part = new java.io.File(src).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val meta = spark.read.parquet(src).schema.json.getBytes("UTF-8")
+    def table(i: Int): String = {
+      val dir = Files.createDirectories(base.resolve(s"t$i.parquet"))
+      Files.copy(part.toPath, dir.resolve(part.getName))
+      Files.write(Tables.schemaPath(dir.toString), meta)
+      dir.toString
+    }
+    val gone = table(0)
+    assert(Tables.relation(spark, gone).count() == 3)
+    Files.list(java.nio.file.Paths.get(gone)).forEach(f => Files.delete(f))
+    Files.delete(java.nio.file.Paths.get(gone))
+    val first = table(1)
+    Tables.relation(spark, first)
+    assert(!Tables.memoized.contains(gone))
+    val rest = (2 to Tables.MaxListed + 10).map(table)
+    rest.foreach(Tables.relation(spark, _))
+    assert(Tables.memoized.size <= Tables.MaxListed)
+    // the least recently read went first
+    assert(!Tables.memoized.contains(first) && Tables.memoized.contains(rest.last))
+  }
+
   test("readTdQuery supports td_time_range in passthrough SQL") {
     val e = td.createEngine("presto:sf0.001", "/root/testdata")
     val df = td.readTdQuery(

@@ -195,4 +195,54 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).distinct.length == events,
       "every left event must appear (matched or null-extended)")
   }
+
+  /** Input rows of each micro-batch the streaming query of registry `key`
+    * ran over the sf0.001 fixture, in batch order (one progress event per
+    * executed batch, the no-data batches included). */
+  private def batchesOf(key: String): Seq[Long] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val prefix = key.takeWhile(_ != '_') + "_out_"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith(prefix))) ids.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (ids.contains(e.progress.id)) rows.add(e.progress.numInputRows)
+      // delivered after every progress event of the query
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (ids.contains(e.id)) done.countDown()
+    }
+    spark.streams.addListener(l)
+    try {
+      SparkEntry.queries(key)(spark, TestSpark.sf).collect()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), s"$key never terminated")
+      rows.toArray.toSeq.map(_.asInstanceOf[Long])
+    } finally spark.streams.removeListener(l)
+  }
+
+  test("the inner stream-stream join runs its fixture in exactly one micro-batch") {
+    val b = batchesOf("i8_stream_stream_join")
+    assert(b == Seq(2000L), s"batches (input rows): $b")
+  }
+
+  test("sentinel harnesses run data plus sentinel, then one no-data batch") {
+    Seq("i21_stream_left_outer_join", "i26_stream_full_outer_join",
+        "i7_stateful_sessionize", "i10_transform_with_state",
+        "i22_stream_topk_state", "i23_stream_map_state").foreach { k =>
+      val b = batchesOf(k)
+      assert(b.length == 2 && b.last == 0L, s"$k batches (input rows): $b")
+    }
+  }
+
+  test("state partitions follow the input size, one per 25k events, capped") {
+    import Streams.statePartitions
+    assert(statePartitions(0L, 4) == 1)
+    assert(statePartitions(1000L, 4) == 1)
+    assert(statePartitions(100000L, 4) == 4)
+    assert(statePartitions(100000L, 2) == 2)
+    assert(statePartitions(25001L, 4) == 2)
+  }
 }
